@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Jobs
 
 /** The end-to-end curation pipeline, as one operator: the stage
   * sequence a web-scale training corpus actually runs —
@@ -30,28 +31,6 @@ import org.apache.spark.sql.functions._
   * just its parts.
   */
 object Curation {
-
-  /** Run independent pipeline branches as CONCURRENT jobs (optimization
-    * guide §2.6): Spark's scheduler happily runs several jobs at once
-    * inside one application — actions are only sequential because
-    * driver code calls them sequentially. The per-modality pipelines of
-    * the media reports/audits are independent until their final join,
-    * so one modality's stage tail back-fills with the next modality's
-    * tasks instead of idling the cluster, and the per-job fixed costs
-    * (stage scheduling, AQE bookkeeping) overlap instead of adding up.
-    * Results keep their order; exceptions propagate unwrapped.
-    */
-  private[graft] def concurrently[A](thunks: Seq[() => A]): Seq[A] =
-    if (thunks.sizeIs <= 1) thunks.map(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-      try {
-        val futs = thunks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-        try futs.map(_.get())
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      } finally pool.shutdown()
-    }
 
   /** The funnel's per-stage (n_docs, n_tokens) report in ONE
     * aggregation pass instead of one global-aggregate job per stage:
@@ -402,7 +381,7 @@ object Curation {
     // are independent until the final join — run them as concurrent
     // jobs (guide §2.6; the image branch also carries the text verdict
     // chain, which depends on its clusters)
-    val Seq(ib, ab, vb) = concurrently(Seq(
+    val Seq(ib, ab, vb) = Jobs.concurrently(Seq(
       () => {
         val istats = Multimodal.imageStatsDhash(spark, images).persist()
         val iclusters = Multimodal.imageClustersFromHashes(
@@ -585,7 +564,7 @@ object Curation {
     // are independent until the final per-doc join — concurrent jobs,
     // guide §2.6.
     val Seq((imgFlags, ipairs), (audFlags, apairs), (vidFlags, vpairs)) =
-      concurrently[(DataFrame, DataFrame)](Seq(
+      Jobs.concurrently[(DataFrame, DataFrame)](Seq(
         () => groupFlags(istats.select("doc_id", "dhash"),
           g => Dedup.bandedHammingPairsIncremental(
             g.select(col("gmin").as("doc_id"), col("dhash")), storedI,

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Jobs
 
 /** FILE-LIST MANIFEST table (round 18, session 2) — the granularity
   * [[StoreVersioning]] cannot reach. The store-level manifest makes
@@ -303,7 +304,7 @@ object IvfIncremental {
       .select((Similarity.STORE_COLS :+ "centroid_id").map(col): _*)
       .persist()
     try {
-      val entries = Curation.concurrently(Seq(
+      val entries = Jobs.concurrently(Seq(
         () => Some(ManifestedTable.writeData(spark, tbl(dir), 1L, assigned,
           "centroid_id")),
         () => {
@@ -536,7 +537,7 @@ object IvfIncremental {
       try {
         // the two per-list counts are independent bounded collects over
         // the persisted cells — concurrent jobs (§2.6)
-        val Seq(addPerList, vicPerList) = Curation.concurrently(Seq(
+        val Seq(addPerList, vicPerList) = Jobs.concurrently(Seq(
           () => adds.map(_.groupBy("centroid_id")
             .agg(count(lit(1)).as("n")).collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap)
@@ -568,7 +569,7 @@ object IvfIncremental {
         ManifestedTable.commit(spark, tbl(dir), newSnap)
         // sidecar AFTER the flip (see scaladoc step 5); the two cell
         // aggregations read disjoint persisted frames — concurrent jobs
-        val Seq(addCells, subCells) = Curation.concurrently(Seq(
+        val Seq(addCells, subCells) = Jobs.concurrently(Seq(
           () => adds.map(statsOfRows).getOrElse(
             Map.empty[(Int, Int), (Long, Long)]),
           () => victims.map(statsOfRows).getOrElse(
@@ -673,7 +674,7 @@ object LexIncremental {
     // the commit/stats markers land — concurrent jobs (§2.6) off the
     // one persisted tf pass; commit then stats keep their order
     try {
-      val entries = Curation.concurrently(Seq(
+      val entries = Jobs.concurrently(Seq(
         () => Some(ManifestedTable.writeData(spark, tbl(dir), 1L, rows,
           "bucket", cluster = false)),
         () => {
@@ -882,7 +883,7 @@ object LexIncremental {
       // a bounded sidecar read, no postings scan to locate victims
       // two independent bounded collects over persisted cells —
       // concurrent jobs (§2.6)
-      val Seq(dayBuckets, tombBuckets) = Curation.concurrently(Seq(
+      val Seq(dayBuckets, tombBuckets) = Jobs.concurrently(Seq(
         () => dayDf.map(_.select("bucket").distinct()
           .collect().map(_.getInt(0)).toSeq).getOrElse(Seq.empty[Int]),
         () => tombDf.map(_.select("bucket").distinct()
@@ -922,7 +923,7 @@ object LexIncremental {
       // repairs. dfreq (the view's ±additive merge for ONLY the
       // affected buckets, swapped per-partition) and the one-row
       // corpus_stats are independent artifacts — concurrent jobs (§2.6)
-      Curation.concurrently(Seq(
+      Jobs.concurrently(Seq(
         () => if (affected.nonEmpty) {
           val baseAff = TextOps.lexStoreDfreq(spark, dir)
             .filter(col("bucket").isin(affected.map(Integer.valueOf): _*))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Jobs
 
 /** Similarity search over the `embeddings` table (SURVEY §2.10):
   * brute-force cosine top-k as the exact baseline, and a random-
@@ -1229,7 +1230,7 @@ object Similarity {
     // just-written bytes for the cells — an extra scan job), and the
     // three independent table writes run as CONCURRENT jobs (§2.6)
     val assigned = ivfIndexAssign(embeddings, cents).persist()
-    try Curation.concurrently(Seq(
+    try Jobs.concurrently(Seq(
       () => cents.write.mode("overwrite").parquet(s"$dir/centroids"),
       () => clusterForWrite(assigned
         .select((STORE_COLS :+ "centroid_id").map(col): _*), "centroid_id")
@@ -2854,7 +2855,7 @@ object Similarity {
               .write.partitionBy("d", "centroid_id")
               .parquet(s"$staging/prefix_codes")
           }
-        Curation.concurrently(
+        Jobs.concurrently(
           Seq(writeCentroids, writeAssignments, writeStats) ++
             pqThunk ++ prefixThunk)
       } finally rows.unpersist(blocking = false)
@@ -3030,7 +3031,7 @@ object Similarity {
               .write.partitionBy("d", "centroid_id")
               .parquet(s"$staging/prefix_codes")
           }
-        Curation.concurrently(
+        Jobs.concurrently(
           Seq(writeCentroids, writeAssignments, writeStats) ++
             pqThunk ++ prefixThunk)
       } finally {

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Jobs
 
 /** Text-analysis operators over the `documents` table (SURVEY §2.10):
   * per-language stats, token counting (whitespace + BPE-ish regex),
@@ -568,7 +569,7 @@ object TextOps {
         // extra exchange would only add a stage per write (measured
         // +0.2-0.4 s each; the scan-shaped store writes are where
         // [[Similarity.clusterForWrite]] pays)
-        try Curation.concurrently(Seq(
+        try Jobs.concurrently(Seq(
           () => postings.withColumn("bucket", lexBucket(nBuckets))
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(s"$dir/day_postings/day=$day"),
@@ -644,7 +645,7 @@ object TextOps {
       if (vDocs > 0) {
         // the ids and dfreq cells are invisible until the stats marker
         // lands — independent, so they write as CONCURRENT jobs (§2.6)
-        Curation.concurrently(Seq(
+        Jobs.concurrently(Seq(
           () => victims.select("doc_id").distinct()
             .write.mode("overwrite").parquet(s"$dir/day_tombstones/day=$day"),
           () => victims.groupBy("token", "bucket").agg(count(lit(1)).as("df"))
@@ -686,7 +687,7 @@ object TextOps {
       // the staged tables all read the still-live store and are
       // independent of one another — CONCURRENT jobs (§2.6); the
       // impact rebuild waits only on the staged postings it reads
-      Curation.concurrently(Seq(
+      Jobs.concurrently(Seq(
         () => {
           Similarity.clusterForWrite(postings, "bucket")
             .write.partitionBy("bucket").parquet(s"$staging/postings")
@@ -739,7 +740,7 @@ object TextOps {
     // reader treats its absence as "not a store", the init marker)
     // aggregate/join-shaped inputs — already AQE-coalesced, no
     // rebalance needed (see bm25IndexStreamDay)
-    try Curation.concurrently(Seq(
+    try Jobs.concurrently(Seq(
       () => postings.withColumn("bucket", lexBucket(nBuckets))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$dir/postings"),

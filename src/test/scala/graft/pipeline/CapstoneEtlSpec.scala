@@ -85,6 +85,83 @@ class CapstoneEtlSpec extends AnyFunSuite with SparkSpec {
     assert(pruned.count() === 1)
   }
 
+  /** The star schema's inputs built in memory: the label dims and the
+    * demographics rows the fixture's ports and states need, so the write
+    * path runs without the reference's data files.
+    */
+  def inMemoryStar(immigration: org.apache.spark.sql.DataFrame,
+                   demoCities: Seq[(String, String)]) = {
+    import org.apache.spark.sql.Row
+    import spark.implicits._
+    val dims = Map(
+      "country" -> Seq(("236", "AFGHANISTAN"), ("111", "FRANCE"))
+        .toDF("code", "country_name"),
+      "port" -> Seq(("CHI", "CHICAGO", "IL"), ("NYC", "NEW YORK", "NY"))
+        .toDF("code", "city", "state_code"),
+      "state" -> Seq(("IL", "ILLINOIS"), ("NY", "NEW YORK"), ("CA", "CALIFORNIA"))
+        .toDF("code", "state_name"),
+      "mode" -> Seq(("1", "Air"), ("2", "Sea"), ("3", "Land"), ("9", "Not reported"))
+        .toDF("code", "mode"),
+      "visa_type" -> Seq(("1", "Business"), ("2", "Pleasure"), ("3", "Student"))
+        .toDF("code", "visa_type"))
+    // two race rows per city: the per-race grain the aggregate collapses
+    val demoRows = demoCities.flatMap { case (city, st) =>
+      Seq("White", "Asian").map(race =>
+        Row(city, st, 35.0, "100", "120", 220, 10, 30, 2.5, st, race, 50))
+    }
+    val demo = spark.createDataFrame(
+      spark.sparkContext.parallelize(demoRows), CapstoneEtl.demographicsSchema)
+    val fact = CapstoneEtl.immigrationFact(spark, immigration, dims("country"),
+      dims("port"), dims("state"), dims("mode"), dims("visa_type"))
+    val portDemo = CapstoneEtl.portDemographics(spark,
+      CapstoneEtl.cleanDemographics(demo), dims("port"))
+    (fact, portDemo, dims)
+  }
+
+  val starTables = Seq("immigrations", "port_demographics", "country", "port",
+    "state", "mode", "visa_type")
+  val bothCities = Seq(("Chicago", "IL"), ("New York", "NY"))
+
+  test("writeStarSchema writes all seven tables with their row counts") {
+    val out = java.nio.file.Files.createTempDirectory("star_out").toString
+    val (fact, portDemo, dims) = inMemoryStar(immigrationFixture, bothCities)
+    CapstoneEtl.writeStarSchema(fact, portDemo, dims, out)
+    val counts = starTables.map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+    assert(counts === Map("immigrations" -> 3L, "port_demographics" -> 2L,
+      "country" -> 2L, "port" -> 2L, "state" -> 3L, "mode" -> 4L, "visa_type" -> 3L))
+    assert(new java.io.File(s"$out/immigrations").list().exists(_.startsWith("year=")))
+    assert(new java.io.File(s"$out/port_demographics").list()
+      .exists(_.startsWith("state_code=")))
+  }
+
+  test("writeStarSchema: an empty gated table fails the gate before any table " +
+      "under outDir is written") {
+    val out = java.nio.file.Files.createTempDirectory("star_gate").toString
+    val (fact, portDemo, dims) = inMemoryStar(immigrationFixture, bothCities)
+    CapstoneEtl.writeStarSchema(fact, portDemo, dims, out)
+    def markers() = starTables.map(t => new java.io.File(s"$out/$t/_marker"))
+    markers().foreach(f => assert(f.createNewFile(), f.toString))
+
+    // only the invalid-port row: the fact's null-rejecting WHERE drops it
+    val (emptyFact, pd1, dims1) = inMemoryStar(
+      immigrationFixture.filter(col("i94port") === "BAD"), bothCities)
+    val e1 = intercept[IllegalArgumentException] {
+      CapstoneEtl.writeStarSchema(emptyFact, pd1, dims1, out)
+    }
+    assert(e1.getMessage.contains("quality check failed: table 'immigrations' is empty"))
+    markers().foreach(f => assert(f.exists, s"$f was overwritten"))
+
+    // no demographics city matches a port: the inner join leaves nothing
+    val (fact2, emptyDemo, dims2) = inMemoryStar(immigrationFixture,
+      Seq(("Springfield", "IL")))
+    val e2 = intercept[IllegalArgumentException] {
+      CapstoneEtl.writeStarSchema(fact2, emptyDemo, dims2, out)
+    }
+    assert(e2.getMessage.contains(
+      "quality check failed: table 'port_demographics' is empty"))
+    markers().foreach(f => assert(f.exists, s"$f was overwritten"))
+  }
+
   test("country dim: invalid label families normalized to NA") {
     val c = CapstoneEtl.countryDim(spark, labels)
     assert(c.filter(col("country_name") === "NA").count() > 0)
