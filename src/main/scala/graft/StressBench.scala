@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: replicates the sf0.1 tables ×N with key offsets
@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   * Replication is an `explode(sequence(...))` fan-out (one scan, no
   * N-way union) with shifted keys: equi-joins stay 1:1 per replica —
   * naive duplication would square join outputs and measure the blowup,
-  * not the operator. Group-size growth (vs group-count growth) is
-  * covered separately by MicroBench's topk_per_key_6m kernel, which
-  * replicates WITHOUT shifting the grouping key.
+  * not the operator. So the harness grows the NUMBER of groups, never
+  * their size: each replica's keys form groups of their own.
   *
-  * Usage: StressBench [sfDir] [factor]
+  * Usage: StressBench [sfDir] [factor]   (CPUs from SPARK_GRAFT_CPUS, default 4)
   */
 object StressBench {
 
@@ -32,24 +31,9 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // A/B mode: SPARK_GRAFT_AB_REF=<gitref> turns this run into the
-    // same-epoch old-code experiment (see [[AbBench]]) — build the
-    // ref's classes aside, alternate fresh-JVM probe runs, emit the
-    // paired table. No Spark session in this process.
-    if (sys.env.get("SPARK_GRAFT_AB_REF").exists(_.trim.nonEmpty)) {
-      AbBench.main(args); return
-    }
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
 

@@ -139,12 +139,13 @@ object GraftFunctions {
 
 /** One-stop session extension registering ALL of graft's Catalyst
   * additions — native functions (cosine_sim, minhash_sketch,
-  * simhash_sketch, hll_distinct), the TopKPerKey planner strategy, and
-  * the CollapseTopK optimizer rule:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
-  * (On an already-created session, the `install`/`register` helpers on
-  * each object do the same through public runtime hooks.)
+  * simhash_sketch, hll_distinct, …), the TopKPerKey and VectorizedCosine
+  * planner strategies, the CollapseTopK optimizer rule and the columnar
+  * cosine rule — through `--conf
+  * spark.sql.extensions=graft.functions.GraftExtensions`, which
+  * [[graft.GraftSession]] sets. This is the only path that registers the
+  * strategies and rules; [[GraftFunctions.register]] adds the functions
+  * alone to a session built without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -17,14 +17,7 @@ object RunCapstone {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunCapstone <outDir> [immigrationParquet]")
     val outDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-capstone")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().appName("graft-capstone").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val immigration: DataFrame =
       if (args.length > 1) spark.read.parquet(args(1))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -24,17 +23,5 @@ object CollapseTopK extends Rule[LogicalPlan] {
       TopKPerKeyPlan(k1, s1, t1, math.min(n1, n2), child)
     case p @ TopKPerKeyPlan(_, _, _, k, _) if k <= 0 =>
       LocalRelation(p.output)
-  }
-}
-
-object GraftOptimizerRules {
-  /** Install on an existing session (idempotent);
-    * `injectOptimizerRule(_ => CollapseTopK)` at builder time is the
-    * extensions-path equivalent.
-    */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(CollapseTopK))
-      spark.experimental.extraOptimizations = cur :+ CollapseTopK
   }
 }

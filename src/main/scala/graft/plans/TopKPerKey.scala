@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression,
@@ -165,24 +165,14 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 object TopKPerKey {
 
-  /** Install the strategy + optimizer rules on an existing session
-    * (idempotent); `GraftExtensions`-style injection works at builder
-    * time too.
-    */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKPerKeyStrategy
-    GraftOptimizerRules.install(spark)
-  }
-
   /** Top-k rows of `df` per `keyCols`, ranked by `scoreCol` DESC with
-    * `tieCol` ASC as the deterministic tie-break.
+    * `tieCol` ASC as the deterministic tie-break. Plans only on a session
+    * built with `GraftExtensions` ([[graft.GraftSession]]), which
+    * registers the strategy and [[CollapseTopK]].
     */
   def apply(df: DataFrame, keyCols: Seq[String], scoreCol: String,
             tieCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute = analyzed.output
       .find(_.name == name)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -22,21 +22,21 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
   * the expression reads it back out. The fused exec skips that copy: the
   * dot/norm loop runs straight over the column vector's primitive
   * storage, one pass per batch (the same reason real columnar engines
-  * splice themselves in at exactly this boundary). Measured honestly
-  * (MicroBench `scan_score_2m`): at 64-dim the scan dominates and the
-  * fused path only matches the codegen expression path — the tier's
-  * value here is the working extension point with bit-exact semantics;
-  * the copy saving grows with vector width.
+  * splice themselves in at exactly this boundary). Measured on a 2M-row
+  * scan at 64 dims, the scan dominates and the fused path only matches
+  * the codegen expression path — the tier's value here is the working
+  * extension point with bit-exact semantics; the copy saving grows with
+  * vector width.
   *
   * Wiring: [[VectorizedCosineStrategy]] plans the logical node as a
   * ROW-based exec; Spark then inserts `ColumnarToRowExec` above the
   * batched scan as usual; [[VectorizedCosineRule.postColumnarTransitions]]
-  * (registered via `GraftExtensions`, builder-time only — Spark has no
-  * post-hoc columnar hook) collapses `CosineScoreExec(ColumnarToRow(c))`
-  * into the fused form when `c` really is columnar. Without the
-  * extension (or behind an exchange) the row fallback produces the SAME
-  * doubles — same fold order, float→double widening per element — so
-  * results are plan-shape-independent (tested, and oracle-matched).
+  * (registered with the strategy by `GraftExtensions` at session build)
+  * collapses `CosineScoreExec(ColumnarToRow(c))` into the fused form
+  * when `c` really is columnar. Over a non-columnar child (or behind an
+  * exchange) the row fallback produces the SAME doubles — same fold
+  * order, float→double widening per element — so results are
+  * plan-shape-independent (tested, and oracle-matched).
   *
   * Semantics: emits (neighbor_id, cosine_sim) per input row; rows with a
   * NULL id/vector or a length != |query| are skipped.
@@ -165,24 +165,13 @@ class VectorizedCosineRule extends org.apache.spark.sql.execution.ColumnarRule {
 
 object VectorizedCosine {
 
-  /** Post-hoc strategy registration (idempotent). NOTE: only the
-    * planner strategy can be added to a live session — the columnar
-    * rule needs GraftExtensions at builder time; without it the operator
-    * still runs, on the row fallback.
-    */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(VectorizedCosineStrategy))
-      spark.experimental.extraStrategies = cur :+ VectorizedCosineStrategy
-  }
-
   /** (neighbor_id, cosine_sim) of every vector in `embeddings` against
-    * `query`. Requires `vec_id`/`embedding` columns; fuses into the
-    * columnar scan when GraftExtensions is installed on the session.
+    * `query`. Requires `vec_id`/`embedding` columns, and a session built
+    * with `GraftExtensions` ([[graft.GraftSession]]), which plans the
+    * node and fuses it into a columnar scan.
     */
   def score(embeddings: DataFrame, query: Array[Double]): DataFrame = {
     val spark = embeddings.sparkSession
-    install(spark)
     val projected = embeddings.select("vec_id", "embedding")
     GraftBridge.ofRows(spark,
       CosineScorePlan(query.toSeq, projected.queryExecution.analyzed))

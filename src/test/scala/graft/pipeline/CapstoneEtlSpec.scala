@@ -4,14 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** End-to-end parity test of the rebuilt capstone pipeline over the
-  * reference's own data files (labels + demographics CSV, FIXTURES.md §A)
-  * plus a synthesized immigration fact (the SAS binary is not present —
-  * SURVEY §2 A2).
+/** End-to-end parity test of the rebuilt capstone pipeline over data
+  * files in the reference's formats (labels + demographics CSV test
+  * resources, FIXTURES.md §A) plus a synthesized immigration fact (the
+  * SAS binary is not present — SURVEY §2 A2).
   */
 class CapstoneEtlSpec extends AnyFunSuite with SparkSpec {
-  val labels = "/root/reference/I94_SAS_Labels_Descriptions.SAS"
-  val demoCsv = "/root/reference/us-cities-demographics.csv"
+  val labels = ReferenceFixtures.labels
+  val demoCsv = ReferenceFixtures.demographicsCsv
 
   def immigrationFixture = {
     import org.apache.spark.sql.Row

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class IniConfigSpec extends AnyFunSuite {
 
   test("parses the reference's own cp.cfg") {
-    val cfg = IniConfig.parseFile("/root/reference/cp.cfg")
+    val cfg = IniConfig.parseFile(ReferenceFixtures.cpCfg)
     val all = cfg.values.flatten.toMap
     assert(all.nonEmpty)
     assert(all.values.forall(_.nonEmpty))

@@ -2,11 +2,11 @@ package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parses the reference's own label dictionary (read-only fixture at
-  * /root/reference/I94_SAS_Labels_Descriptions.SAS — FIXTURES.md §A2).
+/** Parses a label dictionary in the reference's format (the test
+  * resource `reference/I94_SAS_Labels_Descriptions.SAS`, FIXTURES.md §A2).
   */
 class SasLabelsSpec extends AnyFunSuite {
-  val labels = "/root/reference/I94_SAS_Labels_Descriptions.SAS"
+  val labels = ReferenceFixtures.labels
 
   test("i94model block has the 4 transport modes") {
     val modes = SasLabels.parseFile(labels, "i94model").toMap
@@ -22,19 +22,21 @@ class SasLabelsSpec extends AnyFunSuite {
     val states = SasLabels.parseFile(labels, "i94addrl").toMap
     assert(states("CA") === "CALIFORNIA")
     assert(states.contains("99")) // removed later by stateDim, not the parser
-    assert(states.size >= 55)
+    assert(states.size === 15)
   }
 
   test("$i94prtl block: padded values and single-token names survive") {
     val ports = SasLabels.parseFile(labels, "$i94prtl").toMap
-    assert(ports.size >= 600)
+    assert(ports.size === 17)
     // 'WASHINGTON DC' has no comma → downstream split yields null state
     assert(ports.values.exists(v => v.startsWith("WASHINGTON DC")))
+    assert(ports("ALC") === "ALCAN, AK") // padding inside the quotes trimmed
+    assert(ports("INT") === "INT''L FALLS, MN") // embedded quote kept as written
   }
 
   test("i94cntyl block: country codes incl. invalid families") {
     val countries = SasLabels.parseFile(labels, "i94cntyl")
-    assert(countries.size >= 280)
+    assert(countries.size === 24)
     assert(countries.exists(_._2.startsWith("INVALID")))
   }
 

@@ -59,6 +59,17 @@ class TopKPerKeySpec extends AnyFunSuite with SparkSpec {
     assert(got === expected)
   }
 
+  test("planner extensions register once, at session build, never at call time") {
+    val o = Tables.orders(spark, sf)
+    TopKPerKey(o, Seq("o_custkey"), "o_totalprice", "o_orderkey", 3).collect()
+    VectorizedCosine.score(Tables.embeddings(spark, sf), Array.fill(64)(1.0)).collect()
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val strategies = spark.sessionState.planner.strategies
+    assert(strategies.count(_ eq TopKPerKeyStrategy) === 1)
+    assert(strategies.count(_ eq VectorizedCosineStrategy) === 1)
+  }
+
   test("optimizer rule: k <= 0 becomes an empty relation (no execution)") {
     val o = Tables.orders(spark, sf)
     val zero = TopKPerKey(o, Seq("o_custkey"), "o_totalprice", "o_orderkey", 0)

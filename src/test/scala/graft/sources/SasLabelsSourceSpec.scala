@@ -9,7 +9,7 @@ import graft.SparkSpec
   * its SAS binary source.
   */
 class SasLabelsSourceSpec extends AnyFunSuite with SparkSpec {
-  val labels = "/root/reference/I94_SAS_Labels_Descriptions.SAS"
+  val labels = graft.pipeline.ReferenceFixtures.labels
 
   def read(block: String) =
     spark.read.format("graft.sources.SasLabelsSource")
@@ -26,7 +26,7 @@ class SasLabelsSourceSpec extends AnyFunSuite with SparkSpec {
     assert(df.schema.fieldNames.toSeq === Seq("code", "label"))
     df.createOrReplaceTempView("states_v2")
     val n = spark.sql("SELECT count(*) FROM states_v2 WHERE code <> '99'").collect()(0).getLong(0)
-    assert(n >= 54)
+    assert(n === 14)
   }
 
   test("connector output equals the driver-local parser path") {

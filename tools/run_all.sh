@@ -1,6 +1,6 @@
 #!/bin/bash
 # Full driver-simulation: compile, test, verify + oracle compare, bench,
-# capstone ETL, micro-bench. Usage: tools/run_all.sh
+# capstone ETL. Usage: tools/run_all.sh
 set -e
 cd /root/repo
 echo "== compile"; sbt -batch compile | tail -1
@@ -17,5 +17,3 @@ echo "== bench sf0.1"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 java $AO -Xmx8g -cp "$CP" graft.Bench 2>/dev/null | tail -1
 echo "== capstone ETL"
 rm -rf /tmp/graft_capstone && java $AO -Xmx8g -cp "$CP" graft.pipeline.RunCapstone /tmp/graft_capstone 2>/dev/null | tail -1
-echo "== micro-bench sf0.1"
-SPARK_GRAFT_CPUS=32 java $AO -Xmx8g -cp "$CP" graft.MicroBench /root/testdata/sf0.1 2>/dev/null | tail -1
