@@ -12,20 +12,27 @@ object Jobs {
     * of idling the cluster, and the per-job fixed costs (stage
     * scheduling, AQE bookkeeping) overlap instead of adding up.
     *
-    * The pool is fresh per call, so its threads are created here and
-    * inherit the caller's Spark local properties (job group, scheduler
-    * pool): jobs stay attributed to whoever called. Results keep their
-    * order; exceptions propagate unwrapped.
+    * Each thunk runs on a thread created here, so it inherits the
+    * caller's Spark local properties (job group, scheduler pool): jobs
+    * stay attributed to whoever called. The call returns only after
+    * every thread has ended, so no thread outlives it, even when a
+    * thunk fails. Results keep their order; the first failure in thunk
+    * order propagates unwrapped.
     */
   private[graft] def concurrently[A](thunks: Seq[() => A]): Seq[A] =
     if (thunks.sizeIs <= 1) thunks.map(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-      try {
-        val futs = thunks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-        try futs.map(_.get())
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      } finally pool.shutdown()
+      val outcomes = new Array[Either[Throwable, A]](thunks.size)
+      val threads = thunks.zipWithIndex.map { case (t, i) =>
+        new Thread(() => outcomes(i) =
+          try Right(t()) catch { case e: Throwable => Left(e) },
+          s"$THREAD_PREFIX$i")
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      outcomes.toSeq.map(_.fold(e => throw e, identity))
     }
+
+  /** Name prefix of [[concurrently]]'s threads. */
+  private[graft] val THREAD_PREFIX = "graft-concurrently-"
 }

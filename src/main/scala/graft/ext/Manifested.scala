@@ -393,6 +393,7 @@ object IvfIncremental {
     val snap = currentSnap(spark, dir)
     Similarity.storeProbeWith(spark, queryVecs, dir, k, nProbe, keep,
       lists => liveOf(spark, dir, snap, Some(lists)))
+      .orderBy("query_id", "rnk")
   }
 
   /** ATOMIC batch append — the manifest model's third dividend (after

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 import graft.Jobs
 
 /** Similarity search over the `embeddings` table (SURVEY §2.10):
@@ -1021,6 +1022,14 @@ object Similarity {
     picked.toSeq.toDF("centroid_id", "seed_vec_id", "cv", "csq")
   }
 
+  /** The centroid columns a probe reads, with the types [[seedsToDf]]
+    * writes: a probe reads `centroids` under this declared schema, so
+    * it runs no schema-inference job (pinned to the writer by a spec).
+    */
+  private[ext] val CENTROID_PROBE_SCHEMA: StructType = new StructType()
+    .add("centroid_id", IntegerType).add("cv", ArrayType(IntegerType))
+    .add("csq", LongType)
+
   /** Bounded driver fetch of the centroid matrix (nList × dim ints —
     * the [[ivfCentroids]] k×dim adjudication), sorted by centroid id.
     */
@@ -1310,12 +1319,19 @@ object Similarity {
     df.hint("rebalance", cols.map(col): _*)
 
   def ivfIndexStoreCentroids(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): DataFrame = {
+                             dir: String): DataFrame =
+    spark.read.parquet(liveCentroids(spark, dir))
+
+  /** The live `centroids` path, after adopting a staged rename-aside
+    * copy — what every centroid read goes through.
+    */
+  private def liveCentroids(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): String = {
     val live = new org.apache.hadoop.fs.Path(s"$dir/centroids")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     adoptStagedNext(fs, live,
       new org.apache.hadoop.fs.Path(s"$dir/.centroids.next"))
-    spark.read.parquet(s"$dir/centroids")
+    live.toString
   }
 
   def ivfIndexStoreAssignments(spark: org.apache.spark.sql.SparkSession,
@@ -1944,6 +1960,18 @@ object Similarity {
                          queryVecs: DataFrame, dir: String,
                          k: Int = 5, nProbe: Int = 4,
                          keep: Option[DataFrame] = None): DataFrame =
+    ivfStoreProbeUnsorted(spark, queryVecs, dir, k, nProbe, keep)
+      .orderBy("query_id", "rnk")
+
+  /** [[ivfIndexStoreProbe]] without its global sort: the same rows in
+    * no particular order, for callers that fuse or re-rank them (the
+    * store hybrids), which would otherwise pay a range-partitioning
+    * sample job for an order they discard.
+    */
+  private[ext] def ivfStoreProbeUnsorted(spark: org.apache.spark.sql.SparkSession,
+                                         queryVecs: DataFrame, dir: String,
+                                         k: Int, nProbe: Int,
+                                         keep: Option[DataFrame]): DataFrame =
     storeProbeWith(spark, queryVecs, dir, k, nProbe, keep,
       lists => ivfIndexStoreLiveAssignments(spark, dir)
         .filter(col("centroid_id").isin(lists.map(Integer.valueOf): _*)))
@@ -1953,7 +1981,8 @@ object Similarity {
     * exactly those lists — hive partition pruning for the flat store,
     * manifest-entry selection for [[ManifestedTable]]-backed stores.
     * ONE copy of the query-side quantization, centroid ranking, and
-    * exact packed-byte rescore.
+    * exact packed-byte rescore. Rows come back unsorted; the public
+    * probes sort by (query_id, rnk).
     */
   private[ext] def storeProbeWith(spark: org.apache.spark.sql.SparkSession,
                                   queryVecs: DataFrame, dir: String,
@@ -1963,8 +1992,8 @@ object Similarity {
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDotBytes.int_dot_bytes
     graft.functions.GraftFunctions.register(spark)
-    val scored = seedScoreArray(
-      collectSeedCentroids(ivfIndexStoreCentroids(spark, dir)))
+    val scored = seedScoreArray(collectSeedCentroids(
+      spark.read.schema(CENTROID_PROBE_SCHEMA).parquet(liveCentroids(spark, dir))))
     // the probe ranks centroids off the int codes (qv — the scored
     // array's form) but dots candidates in the store's PACKED form
     val q0 = {
@@ -2018,7 +2047,6 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
         col("qdot"), round(col("sim"), 6).as("q_cosine"))
-      .orderBy("query_id", "rnk")
   }
 
   /** FILTERED ANN over the persisted index (`q_ivf_store_probe_filtered`)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import graft.Jobs
 
 /** Text-analysis operators over the `documents` table (SURVEY §2.10):
@@ -331,6 +332,14 @@ object TextOps {
     (postings, c.dfreq, (st.getLong(0), st.getLong(1)), tfCached)
   }
 
+  /** The `dfreq` sidecar's columns as every writer lays them out: the
+    * batch frames' (token, df) with its [[lexBucket]] partition. Reads
+    * declare it, so they run no schema-inference job (pinned to the
+    * writers by a spec).
+    */
+  private[ext] val LEX_DFREQ_SCHEMA: StructType = new StructType()
+    .add("token", StringType).add("df", LongType).add("bucket", IntegerType)
+
   private[ext] def lexStatsDf(spark: org.apache.spark.sql.SparkSession,
                          nDocs: Long, totalLen: Long,
                          nBuckets: Int): DataFrame = {
@@ -338,6 +347,13 @@ object TextOps {
     Seq((nDocs, totalLen, nBuckets))
       .toDF("n_docs", "total_len", "n_buckets").coalesce(1)
   }
+
+  /** The `corpus_stats` row as [[lexStatsDf]] writes it, declared for
+    * the same reason as [[LEX_DFREQ_SCHEMA]].
+    */
+  private[ext] val LEX_STATS_SCHEMA: StructType = new StructType()
+    .add("n_docs", LongType).add("total_len", LongType)
+    .add("n_buckets", IntegerType)
 
   /** Read the lexical store's one-row corpus stats (adopting a staged
     * rename-aside copy first); fail LOUD on absence — appending or
@@ -355,7 +371,8 @@ object TextOps {
         s"no corpus_stats at $p — not a lexical index store (or its " +
           "stats were lost mid-write; bm25IndexStatsRebuild recovers them " +
           "from the postings)")
-    val Array(r) = spark.read.parquet(p.toString).collect()
+    val Array(r) = spark.read.schema(LEX_STATS_SCHEMA).parquet(p.toString)
+      .collect()
     (r.getLong(r.fieldIndex("n_docs")), r.getLong(r.fieldIndex("total_len")),
       r.getInt(r.fieldIndex("n_buckets")))
   }
@@ -379,12 +396,11 @@ object TextOps {
           val n = st.getPath.getName
           !n.startsWith("_") && !n.startsWith(".")
         }) {
-      import org.apache.spark.sql.types._
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new StructType().add("token", StringType).add("df", LongType)
-          .add("bucket", IntegerType))
-    } else spark.read.parquet(p.toString).select("token", "df", "bucket")
+        LEX_DFREQ_SCHEMA)
+    } else spark.read.schema(LEX_DFREQ_SCHEMA).parquet(p.toString)
+      .select("token", "df", "bucket")
   }
 
   private[ext] def lexDayDirExists(spark: org.apache.spark.sql.SparkSession,
@@ -1384,18 +1400,27 @@ object TextOps {
     * ranking), and the fusion is the same rank-only RRF. At 100 TB
     * NEITHER arm scans the raw corpus per query — per-call bytes are
     * query-vocabulary buckets + nProbe inverted lists.
+    *
+    * Scale shape: a probe is bound by fixed per-job costs, not by data,
+    * so the two arms run as CONCURRENT jobs and each is materialized
+    * (`localCheckpoint`, numQueries × arm rows) before the fusion. The
+    * call therefore runs these jobs eagerly, each arm on its own
+    * thread: the lexical arm's postings schema inference, its query-
+    * token bucket collect and its checkpoint (pruned scan, integer-micro
+    * sum, window); the IVF arm's centroid collect, its assignments
+    * schema inference, its probe-frame collect (the list ids to prune
+    * to) and its checkpoint (pruned scan, rescore, window). The one-row
+    * `corpus_stats` read and the centroid read use declared schemas, so
+    * neither infers one. Only the fusion (a full-outer join of two
+    * bounded frames, one window, the final sort) runs on the caller's
+    * action.
     */
   def hybridRrfStoreTopDocs(queryDocs: DataFrame, queryVecs: DataFrame,
                             lexDir: String, annDir: String,
                             k: Int = 5, arm: Int = 10, nProbe: Int = 4,
                             rrfK: Int = 60): DataFrame =
-    fuseRrf(bm25StoreQueryArm(queryDocs.sparkSession, queryDocs, lexDir,
-        arm),
-      graft.ext.Similarity.ivfIndexStoreProbe(queryVecs.sparkSession,
-        queryVecs, annDir, k = arm, nProbe = nProbe)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rnk").as("emb_rnk")),
-      k, rrfK)
+    fuseStoreArms(queryDocs, queryVecs, lexDir, annDir, None, None,
+      k, arm, nProbe, rrfK)
 
   /** The FILTERED store hybrid (`q_hybrid_rrf_store_filtered`) — the
     * production "retrieve among docs matching a predicate" shape,
@@ -1414,13 +1439,33 @@ object TextOps {
                                     k: Int = 5, arm: Int = 10,
                                     nProbe: Int = 4,
                                     rrfK: Int = 60): DataFrame =
-    fuseRrf(bm25StoreQueryArm(queryDocs.sparkSession, queryDocs, lexDir,
-        arm, keep = Some(lexKeep)),
-      graft.ext.Similarity.ivfIndexStoreProbe(queryVecs.sparkSession,
-        queryVecs, annDir, k = arm, nProbe = nProbe, keep = Some(annKeep))
+    fuseStoreArms(queryDocs, queryVecs, lexDir, annDir, Some(lexKeep),
+      Some(annKeep), k, arm, nProbe, rrfK)
+
+  /** Both store hybrids' arms as CONCURRENT jobs (§2.6): each arm is a
+    * chain of small jobs whose fixed costs overlap the other's instead
+    * of adding up. Each arm comes back materialized (bounded: numQueries
+    * × arm rows), so the fusion re-runs neither scan; the IVF arm skips
+    * the public probe's global sort, which the fusion's window would
+    * discard. A failing arm's own exception propagates once both arms
+    * have stopped.
+    */
+  private def fuseStoreArms(queryDocs: DataFrame, queryVecs: DataFrame,
+                            lexDir: String, annDir: String,
+                            lexKeep: Option[DataFrame],
+                            annKeep: Option[DataFrame],
+                            k: Int, arm: Int, nProbe: Int,
+                            rrfK: Int): DataFrame = {
+    val Seq(lexArm, embArm) = Jobs.concurrently(Seq(
+      () => bm25StoreQueryArm(queryDocs.sparkSession, queryDocs, lexDir,
+        arm, keep = lexKeep),
+      () => graft.ext.Similarity.ivfStoreProbeUnsorted(queryVecs.sparkSession,
+        queryVecs, annDir, k = arm, nProbe = nProbe, keep = annKeep)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rnk").as("emb_rnk")),
-      k, rrfK)
+          col("rnk").as("emb_rnk"))
+        .localCheckpoint(true)))
+    fuseRrf(lexArm, embArm, k, rrfK)
+  }
 
   /** The doc-as-query BM25 arm: top-`arm` docs per query doc by the
     * `q_bm25` arithmetic over the query's DISTINCT tokens, with each

@@ -19,6 +19,20 @@ class JobsSpec extends AnyFunSuite with SparkSpec {
     assert(thrown eq boom)
   }
 
+  test("concurrently: a failure propagates only after every thunk has " +
+    "ended, and no thread outlives the call") {
+    import scala.jdk.CollectionConverters._
+    val slowEnded = new java.util.concurrent.atomic.AtomicBoolean(false)
+    intercept[IllegalStateException] {
+      Jobs.concurrently(Seq(
+        () => throw new IllegalStateException("fast"),
+        () => { Thread.sleep(200); slowEnded.set(true) }))
+    }
+    assert(slowEnded.get())
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.isAlive && t.getName.startsWith(Jobs.THREAD_PREFIX)))
+  }
+
   test("concurrently: every thunk sees the caller's job group") {
     val sc = spark.sparkContext
     sc.setJobGroup("jobs-spec", "concurrently inherits local properties",

@@ -418,6 +418,109 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
       "every fused result must satisfy the predicate")
   }
 
+  /** A seeded corpus for the store-hybrid tests: `n` documents over a
+    * 40-word vocabulary and their 16-dim embeddings, ids shared.
+    */
+  def storeCorpus(n: Int = 240): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val rows = (0L until n.toLong).map { id =>
+      (id, Seq.fill(5 + rng.nextInt(20))(s"w${rng.nextInt(40)}").mkString(" "),
+        Array.fill(16)(rng.nextFloat() * 2 - 1))
+    }
+    (rows.map(r => (r._1, r._2)).toDF("doc_id", "text"),
+      rows.map(r => (r._1, r._3)).toDF("vec_id", "embedding"))
+  }
+
+  def tmpStore(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+
+  test("store hybrid serves fresh statistics: after an append and after " +
+    "compaction it answers like stores built fresh from the same docs") {
+    import org.apache.spark.sql.functions.col
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_fresh_lex"), tmpStore("graft_fresh_ann"))
+    TextOps.bm25IndexInit(d.filter(col("doc_id") % 2 === 0), lexDir)
+    Similarity.ivfIndexStoreInit(emb.filter(col("vec_id") % 2 === 0), annDir)
+    TextOps.bm25IndexAppend(spark, d.filter(col("doc_id") % 2 === 1), lexDir)
+    Similarity.ivfIndexStoreAppend(spark,
+      emb.filter(col("vec_id") % 2 === 1), annDir)
+    // nProbe = nList: the semantic arm is exact whatever centroids a
+    // store holds, so stores seeded from all docs are a valid reference
+    // for stores seeded from half of them
+    val (qd, qv) = (d.filter(col("doc_id") < 10), emb.filter(col("vec_id") < 10))
+    def probe(lex: String, ann: String) = TextOps.hybridRrfStoreTopDocs(qd, qv,
+      lex, ann, nProbe = 16).collect().map(_.toSeq).toSeq
+    val (freshLex, freshAnn) = (tmpStore("graft_fresh_lex0"), tmpStore("graft_fresh_ann0"))
+    TextOps.bm25IndexInit(d, freshLex)
+    Similarity.ivfIndexStoreInit(emb, freshAnn)
+    val fresh = probe(freshLex, freshAnn)
+    assert(fresh.nonEmpty)
+    assert(probe(lexDir, annDir) === fresh, "probe after append")
+    val lexLive = TextOps.bm25IndexCompact(spark, lexDir)
+    Similarity.ivfIndexStoreCompact(spark, annDir)
+    assert(probe(lexLive, annDir) === fresh, "probe after compaction")
+  }
+
+  test("store hybrid over a non-store lexDir throws the lexical arm's own " +
+    "IOException, and no arm thread outlives the call") {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_fail_lex"), tmpStore("graft_fail_ann"))
+    Similarity.ivfIndexStoreInit(emb, annDir)
+    TextOps.bm25IndexInit(d, lexDir)
+    // corpus_stats is the init marker: without it the dir is no store
+    val fs = new org.apache.hadoop.fs.Path(lexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$lexDir/corpus_stats"), true)
+    val (qd, qv) = (d.filter(col("doc_id") < 10), emb.filter(col("vec_id") < 10))
+    val sequential = intercept[java.io.IOException] {
+      TextOps.bm25StoreQueryArm(spark, qd, lexDir)
+    }
+    val e = intercept[java.io.IOException] {
+      TextOps.hybridRrfStoreTopDocs(qd, qv, lexDir, annDir)
+    }
+    assert(e.getMessage.startsWith("no corpus_stats"))
+    assert(e.getMessage === sequential.getMessage)
+    val left = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(graft.Jobs.THREAD_PREFIX))
+    assert(left.isEmpty, s"threads outlived the call: $left")
+  }
+
+  test("declared sidecar schemas match what the store writers write") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.StructType
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_schema_lex"), tmpStore("graft_schema_ann"))
+    // types compare by SQL name, which ignores nullability: a parquet
+    // read makes every field nullable whatever the writer declared
+    def pinned(path: String, declared: StructType): Unit = {
+      val inferred = spark.read.parquet(path).schema
+      declared.fields.foreach { f =>
+        assert(inferred.fieldNames.contains(f.name), s"$path has no ${f.name}")
+        assert(inferred(f.name).dataType.sql === f.dataType.sql,
+          s"$path.${f.name}")
+      }
+    }
+    def check(lex: String): Unit = {
+      pinned(s"$lex/corpus_stats", TextOps.LEX_STATS_SCHEMA)
+      pinned(s"$lex/dfreq", TextOps.LEX_DFREQ_SCHEMA)
+      pinned(s"$annDir/centroids", Similarity.CENTROID_PROBE_SCHEMA)
+    }
+    TextOps.bm25IndexInit(d.filter(col("doc_id") % 2 === 0), lexDir)
+    Similarity.ivfIndexStoreInit(emb.filter(col("vec_id") % 2 === 0), annDir)
+    check(lexDir)
+    // the append and compaction writers too
+    TextOps.bm25IndexAppend(spark, d.filter(col("doc_id") % 2 === 1), lexDir)
+    Similarity.ivfIndexStoreAppend(spark,
+      emb.filter(col("vec_id") % 2 === 1), annDir)
+    check(lexDir)
+    val lexLive = TextOps.bm25IndexCompact(spark, lexDir)
+    Similarity.ivfIndexStoreCompact(spark, annDir)
+    check(lexLive)
+  }
+
   test("vocabCoverage: OOV rate against the top-V corpus vocabulary") {
     // vocab size 2 → {'a' (4 occ), 'b' (2 occ)}; 'z','q' are OOV
     val d = docs((1L, "a a b z", "en"), (2L, "a a b q", "en"))

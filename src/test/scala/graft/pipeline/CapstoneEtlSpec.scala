@@ -134,6 +134,22 @@ class CapstoneEtlSpec extends AnyFunSuite with SparkSpec {
       .exists(_.startsWith("state_code=")))
   }
 
+  test("RunCapstone from cp.cfg: inputs resolve beside the config, and the " +
+    "entry point writes the seven tables with their row counts") {
+    assert(RunCapstone.inputPaths(ReferenceFixtures.cpCfg) === ((labels, demoCsv)))
+    val out = java.nio.file.Files.createTempDirectory("capstone_cli").toString
+    RunCapstone.run(spark, Seq(ReferenceFixtures.cpCfg, out))
+    val counts = starTables.map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+    // every synthesized row with a label-drawn port survives the
+    // null-rejection WHERE; the dims are the fixture's label sets ('99'
+    // dropped from the states) and its four port-matching cities
+    val validFact = RunCapstone.syntheticImmigration(spark, labels)
+      .filter(col("i94port") =!= "?!").count()
+    assert(counts === Map("immigrations" -> validFact, "port_demographics" -> 4L,
+      "country" -> 24L, "port" -> 17L, "state" -> 14L, "mode" -> 4L,
+      "visa_type" -> 3L))
+  }
+
   test("writeStarSchema: an empty gated table fails the gate before any table " +
       "under outDir is written") {
     val out = java.nio.file.Files.createTempDirectory("star_gate").toString

@@ -7,9 +7,17 @@ For each query dir under <verify_outdir>: read the Spark parquet result,
 run the oracle SQL from oracle_sql.json in DuckDB with views over
 <sfdir>/<table>.parquet, sort columns by name + rows by all values, and
 compare exactly. Prints PASS/FAIL per query.
+
+DuckDB runs with a fixed memory limit and may spill to a temp dir under
+<verify_outdir>. Its default limit is 80% of host RAM, which on a shared
+host can starve other processes; 8GB is what the heaviest passing query
+at sf0.01 needs (q_multimodal_funnel fails at 6GB).
 """
 import sys, os, json, math
 import duckdb
+
+MEMORY_LIMIT = "8GB"
+SPILL_DIR = ".duckdb_spill"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -39,14 +47,17 @@ def cell_eq(a, b):
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "memory_limit": MEMORY_LIMIT,
+        "temp_directory": os.path.join(outdir, SPILL_DIR)})
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     names = sorted(d for d in os.listdir(outdir)
-                   if os.path.isdir(os.path.join(outdir, d)))
+                   if os.path.isdir(os.path.join(outdir, d))
+                   and not d.startswith("."))
     n_pass = n_fail = 0
     for name in names:
         got = con.sql(

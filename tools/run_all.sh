@@ -16,4 +16,4 @@ done
 echo "== bench sf0.1"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 java $AO -Xmx8g -cp "$CP" graft.Bench 2>/dev/null | tail -1
 echo "== capstone ETL"
-rm -rf /tmp/graft_capstone && java $AO -Xmx8g -cp "$CP" graft.pipeline.RunCapstone /tmp/graft_capstone 2>/dev/null | tail -1
+rm -rf /tmp/graft_capstone && java $AO -Xmx8g -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1
