@@ -330,35 +330,6 @@ object SparkEntry {
       TextOps.bm25IndexCompact(s, lexDir)
       TextOps.bm25StoreTopDocs(s, lexDir)
     }),
-    // the lexical store under the VERSION-POINTER MANIFEST — same law
-    // as q_ivf_store_versioned: init publishes store_v1, streamed days
-    // mutate v1 in place, compact publishes store_v2 with one atomic
-    // marker creation, and a reader pinned to v1 across the publish
-    // serves the SAME ranking as a fresh v2 reader (fold invisible,
-    // old version physically intact for the in-flight reader)
-    "q_bm25_store_versioned" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit, md5, substring}
-      val docs = Tables.documents(s, d)
-      val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_ver_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
-      StoreVersioning.publish(s, base) { root =>
-        TextOps.bm25IndexInit(docs.filter(h < "8"), root)
-      }
-      val v1 = StoreVersioning.resolve(s, base)
-      TextOps.bm25IndexStreamDay(s,
-        docs.filter(h >= lit("8") && h < lit("c")), 0L, v1)
-      TextOps.bm25IndexStreamDay(s, docs.filter(h >= "c"), 1L, v1)
-      TextOps.bm25IndexCompact(s, v1) // publishes v2; v1 intact
-      val v2 = StoreVersioning.resolve(s, base)
-      require(v2 != v1, s"compact must publish a new version, got $v2")
-      TextOps.bm25StoreTopDocs(s, v2).withColumn("arm", lit("current_v2"))
-        .unionByName(TextOps.bm25StoreTopDocs(s, v1)
-          .withColumn("arm", lit("pinned_v1")))
-        .orderBy("arm", "token", "rnk")
-    }),
     // the lexical INCREMENTAL fold (round 18, session 2 — the IVF
     // incfold's twin): manifested postings, streamed days + a
     // tombstone folded into ONLY the buckets their tokens touch, day
@@ -801,75 +772,6 @@ object SparkEntry {
         emb.filter(h >= lit("8") && h < lit("c")), 0L, dir)
       Similarity.ivfIndexStreamDay(s, emb.filter(h >= "c"), 1L, dir)
       Similarity.ivfIndexStoreCompact(s, dir)
-    }),
-    // the same lifecycle under the VERSION-POINTER MANIFEST (round 18,
-    // session 2 — the concurrent-reader fix): init publishes store_v1,
-    // the streamed days land in v1's root (in-place, the LSM shape),
-    // the compact publishes store_v2 through stageThenSwap's versioned
-    // branch — committing with ONE atomic marker creation, so no
-    // instant without a live root ever exists. The law certified here
-    // is the reader-grace guarantee itself: a reader PINNED to v1
-    // before the publish reads the SAME occupancy off v1's untouched
-    // bytes as a fresh reader resolving v2 — both arms against one
-    // oracle (the fold is logically invisible AND the old version is
-    // physically intact)
-    "q_ivf_store_versioned" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit, md5, substring}
-      val emb = Tables.embeddings(s, d)
-      val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_ver_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
-      StoreVersioning.publish(s, base) { root =>
-        Similarity.ivfIndexStoreInit(emb.filter(h < "8"), root)
-      }
-      val v1 = StoreVersioning.resolve(s, base)
-      Similarity.ivfIndexStreamDay(s,
-        emb.filter(h >= lit("8") && h < lit("c")), 0L, v1)
-      Similarity.ivfIndexStreamDay(s, emb.filter(h >= "c"), 1L, v1)
-      Similarity.ivfIndexStoreCompact(s, v1) // publishes v2; v1 intact
-      val v2 = StoreVersioning.resolve(s, base)
-      require(v2 != v1, s"compact must publish a new version, got $v2")
-      Similarity.ivfIndexStoreOccupancy(s, v2)
-        .withColumn("arm", lit("current_v2"))
-        .unionByName(Similarity.ivfIndexStoreOccupancy(s, v1)
-          .withColumn("arm", lit("pinned_v1")))
-        .orderBy("arm", "centroid_id")
-    }),
-    // TIME TRAVEL with DISTINGUISHABLE snapshots — the adversarial
-    // complement of q_ivf_store_versioned (whose two arms serve the
-    // same logical content, so a resolveVersion that always returned
-    // CURRENT would still hash-match there): snapshot N-1 is an init
-    // over the stored half, snapshot N a full RE-BUILD (the corrected-
-    // upstream re-ingest shape) — genuinely different occupancy, so
-    // the hash certifies the pinned resolve reads the PRIOR version's
-    // bytes and GC's retain-2 really kept them. Version ids are read
-    // RELATIVELY (previous = versions.init.last) so the query is
-    // rerun-stable as publishes accumulate within a session
-    "q_ivf_store_time_travel" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit, md5, substring}
-      val emb = Tables.embeddings(s, d)
-      val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_tt_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
-      StoreVersioning.publish(s, base) { root =>
-        Similarity.ivfIndexStoreInit(emb.filter(h < "8"), root)
-      }
-      StoreVersioning.publish(s, base) { root =>
-        Similarity.ivfIndexStoreInit(emb, root)
-      }
-      val vs = StoreVersioning.versions(s, base)
-      require(vs.size == 2, s"retain-2 GC must keep exactly 2, got $vs")
-      val prev = StoreVersioning.resolveVersion(s, base, vs.init.last)
-      val curr = StoreVersioning.resolveVersion(s, base, vs.last)
-      Similarity.ivfIndexStoreOccupancy(s, curr)
-        .withColumn("arm", lit("snapshot_curr"))
-        .unionByName(Similarity.ivfIndexStoreOccupancy(s, prev)
-          .withColumn("arm", lit("snapshot_prev")))
-        .orderBy("arm", "centroid_id")
     }),
     // the rebalance step: same drifted store, re-seeded from the FULL
     // stored codes (packed bytes unpacked; embeddings never re-read)
@@ -1949,26 +1851,6 @@ object SparkEntry {
       "GROUP BY centroid_id")
   require(IVF_STORE_STREAM_DEL_SQL != IVF_STORE_OCC_SQL,
     "IVF_STORE_STREAM_DEL_SQL replace matched nothing — the per CTE changed")
-
-  /** IVF_STORE_OCC_SQL restricted to the stored HALF on both sides
-    * (seeds already draw from it; membership now does too) — the
-    * occupancy of an init over the h<'8' slice alone, i.e. the
-    * time-travel query's PREVIOUS snapshot. */
-  private val IVF_STORE_OCC_HALF_SQL: String = IVF_STORE_OCC_SQL.replace(
-    "base AS (SELECT * FROM b WHERE qsq > 0)",
-    "base AS (SELECT * FROM b WHERE qsq > 0 AND stored)")
-  require(IVF_STORE_OCC_HALF_SQL != IVF_STORE_OCC_SQL,
-    "IVF_STORE_OCC_HALF_SQL replace matched nothing — the base CTE changed")
-
-  /** IVF_STORE_OCC_SQL with seeds drawn from the FULL corpus (the
-    * fresh-build form `q_ivf_store_reseed` also uses) — the occupancy
-    * of an init over everything, i.e. the time-travel query's CURRENT
-    * snapshot. */
-  private val IVF_STORE_OCC_FULLSEED_SQL: String = IVF_STORE_OCC_SQL.replace(
-    "FROM base WHERE stored) WHERE centroid_id < 16",
-    "FROM base) WHERE centroid_id < 16")
-  require(IVF_STORE_OCC_FULLSEED_SQL != IVF_STORE_OCC_SQL,
-    "IVF_STORE_OCC_FULLSEED_SQL replace matched nothing — the seeds CTE changed")
 
   /** Okapi BM25 top-3 docs per top-10 corpus term — ONE oracle text
     * for the raw-corpus ranker (`q_bm25`), the store-served ranker
@@ -4559,13 +4441,6 @@ object SparkEntry {
     // (fold invariance): one oracle certifies the whole trajectory
     "q_bm25_store_stream" -> BM25_SQL,
     "q_bm25_store_compact" -> BM25_SQL,
-    // versioned lexical lifecycle: reader pinned to v1 across the
-    // publish and a fresh v2 reader serve the SAME ranking
-    "q_bm25_store_versioned" ->
-      s"""WITH r AS ($BM25_SQL),
-         |arms AS (SELECT 'current_v2' AS arm UNION ALL SELECT 'pinned_v1')
-         |SELECT arms.arm, r.token, r.rnk, r.doc_id, r.tf, r.dl, r.bm25
-         |FROM arms CROSS JOIN r ORDER BY arm, token, rnk""".stripMargin,
     // lexical sidecar fsck: postings-derived totals vs the sidecars,
     // booleans TRUE-iff-held, real counts pinned by the hash
     "q_bm25_store_fsck" ->
@@ -6398,27 +6273,6 @@ object SparkEntry {
     // assignment facts are unchanged, so the SAME occupancy oracle
     // certifies the fold (and that day rows entered the lists once)
     "q_ivf_store_compact" -> IVF_STORE_OCC_SQL,
-    // versioned lifecycle: BOTH arms (reader pinned to v1 across the
-    // publish, fresh reader on v2) must equal the same folded
-    // occupancy — the fold is logically invisible and the superseded
-    // version physically intact, so the oracle is the occupancy law
-    // cross-joined with the two arm tags
-    "q_ivf_store_versioned" ->
-      s"""WITH occ AS ($IVF_STORE_OCC_SQL),
-         |arms AS (SELECT 'current_v2' AS arm UNION ALL SELECT 'pinned_v1')
-         |SELECT arms.arm, occ.centroid_id, occ.seed_vec_id,
-         |  occ.list_size, occ.n_codes, occ.share
-         |FROM arms CROSS JOIN occ ORDER BY arm, centroid_id""".stripMargin,
-    // time travel: the two snapshots are DIFFERENT stores — previous
-    // is the half-corpus init, current the full re-build — so the
-    // oracle is the two occupancy laws, one per arm
-    "q_ivf_store_time_travel" ->
-      s"""WITH o1 AS ($IVF_STORE_OCC_HALF_SQL),
-         |o2 AS ($IVF_STORE_OCC_FULLSEED_SQL),
-         |u AS (SELECT 'snapshot_prev' AS arm, * FROM o1
-         |      UNION ALL SELECT 'snapshot_curr' AS arm, * FROM o2)
-         |SELECT arm, centroid_id, seed_vec_id, list_size, n_codes, share
-         |FROM u ORDER BY arm, centroid_id""".stripMargin,
     "q_ivf_store_stream_del" -> IVF_STORE_STREAM_DEL_SQL,
     // the incremental fold obeys the SAME survivor law — different
     // fold machinery (manifest flip vs whole-store swap), same result
@@ -7612,17 +7466,19 @@ object SparkEntry {
     // multimodal funnel: junk gate (honest luma replay) → URL canon
     // chain → donor-join text groups → component walk over surviving
     // images → classifier gate, with per-stage doc/token counts
+    // every CTE is AS MATERIALIZED: DuckDB 1.0 inlines CTEs, and this
+    // chain of CTEs that reference earlier ones then outgrows memory
     "q_multimodal_funnel" ->
       """WITH RECURSIVE
-        |geo AS (
+        |geo AS MATERIALIZED (
         |  SELECT doc_id, doc_id % 4 = 0 AS flat,
         |    doc_id % 50 AS key, doc_id // 50 AS bump,
         |    CASE WHEN doc_id % 4 = 0 THEN 16 ELSE 8 + (doc_id % 50) % 9 END AS w,
         |    CASE WHEN doc_id % 4 = 0 THEN 16 ELSE 8 + (doc_id % 50) % 7 END AS h
         |  FROM documents),
-        |qx AS (SELECT doc_id, flat, key, bump, w, h, unnest(range(0, w)) AS x FROM geo),
-        |qy AS (SELECT doc_id, flat, key, bump, w, h, x, unnest(range(0, h)) AS y FROM qx),
-        |qlum AS (SELECT doc_id,
+        |qx AS MATERIALIZED (SELECT doc_id, flat, key, bump, w, h, unnest(range(0, w)) AS x FROM geo),
+        |qy AS MATERIALIZED (SELECT doc_id, flat, key, bump, w, h, x, unnest(range(0, h)) AS y FROM qx),
+        |qlum AS MATERIALIZED (SELECT doc_id,
         |  CASE WHEN flat THEN 1000 * ((doc_id * 31) % 256)
         |    ELSE 299 * (CASE WHEN x = 0 AND y = 0
         |        THEN ((key*7 + x*37 + y*59 + x*y*13) % 256 + bump) % 256
@@ -7630,46 +7486,46 @@ object SparkEntry {
         |      + 587 * ((key*11 + x*23 + y*41 + x*y*7) % 256)
         |      + 114 * ((key*13 + x*29 + y*31 + x*y*17) % 256) END AS l
         |  FROM qy),
-        |vd AS (
+        |vd AS MATERIALIZED (
         |  SELECT doc_id, doc_id % 37 AS vkey, doc_id // 37 AS vbump,
         |    4 + (doc_id % 37) % 5 AS vn,
         |    8 + (doc_id % 37) % 9 AS vw, 8 + (doc_id % 37) % 7 AS vh
         |  FROM documents),
-        |vf AS (SELECT doc_id, vkey, vbump, vn, vw, vh, unnest(range(0, vn)) AS fr FROM vd),
-        |vjs AS (SELECT doc_id, vkey, vbump, fr, vw, vh, unnest(range(0, 7)) AS j FROM vf),
-        |vg0 AS (SELECT doc_id, vkey, vbump, fr, vw, vh, j, unnest(range(0, 10)) AS i FROM vjs),
-        |vgrid AS (SELECT doc_id, vkey, vbump, fr, j, i,
+        |vf AS MATERIALIZED (SELECT doc_id, vkey, vbump, vn, vw, vh, unnest(range(0, vn)) AS fr FROM vd),
+        |vjs AS MATERIALIZED (SELECT doc_id, vkey, vbump, fr, vw, vh, unnest(range(0, 7)) AS j FROM vf),
+        |vg0 AS MATERIALIZED (SELECT doc_id, vkey, vbump, fr, vw, vh, j, unnest(range(0, 10)) AS i FROM vjs),
+        |vgrid AS MATERIALIZED (SELECT doc_id, vkey, vbump, fr, j, i,
         |  ((2*i+1)*vw) // 20 AS x, ((2*j+1)*vh) // 14 AS y FROM vg0),
-        |vlum AS (SELECT doc_id, fr, j, i,
+        |vlum AS MATERIALIZED (SELECT doc_id, fr, j, i,
         |  299 * (CASE WHEN fr = 0 AND x = 0 AND y = 0
         |    THEN ((vkey*7 + fr*19 + x*37 + y*59 + x*y*13) % 256 + vbump) % 256
         |    ELSE (vkey*7 + fr*19 + x*37 + y*59 + x*y*13) % 256 END)
         |  + 587 * ((vkey*11 + fr*23 + x*23 + y*41 + x*y*7) % 256)
         |  + 114 * ((vkey*13 + fr*29 + x*29 + y*31 + x*y*17) % 256) AS l
         |  FROM vgrid),
-        |vbits AS (SELECT a.doc_id, a.fr, a.j, a.i,
+        |vbits AS MATERIALIZED (SELECT a.doc_id, a.fr, a.j, a.i,
         |    CASE WHEN b.l > a.l THEN 1 ELSE 0 END AS bit
         |  FROM vlum a JOIN vlum b ON b.doc_id = a.doc_id AND b.fr = a.fr
         |    AND b.j = a.j AND b.i = a.i + 1
         |  WHERE a.i < 9),
-        |vhsh AS (SELECT doc_id, fr,
+        |vhsh AS MATERIALIZED (SELECT doc_id, fr,
         |  CAST(SUM(CAST(bit AS BIGINT) << (j*9 + i)) AS BIGINT) AS dhash
         |  FROM vbits GROUP BY doc_id, fr),
-        |vstat AS (SELECT vd.doc_id,
+        |vstat AS MATERIALIZED (SELECT vd.doc_id,
         |    (SELECT COUNT(DISTINCT dhash) FROM vhsh
         |     WHERE vhsh.doc_id = vd.doc_id) = 1 AS is_static
         |  FROM vd),
-        |vsl AS (SELECT doc_id, vn, unnest(range(0, 4)) AS sj FROM vd),
-        |vsig AS (SELECT vsl.doc_id, vsl.sj, h2.dhash
+        |vsl AS MATERIALIZED (SELECT doc_id, vn, unnest(range(0, 4)) AS sj FROM vd),
+        |vsig AS MATERIALIZED (SELECT vsl.doc_id, vsl.sj, h2.dhash
         |  FROM vsl JOIN vhsh h2 ON h2.doc_id = vsl.doc_id
         |    AND h2.fr = (vsl.sj * vsl.vn) // 4),
-        |s1 AS (
+        |s1 AS MATERIALIZED (
         |  SELECT q.doc_id FROM
         |    (SELECT doc_id FROM qlum GROUP BY doc_id
         |     HAVING COUNT(DISTINCT l) > 1) q
         |  JOIN vstat ON vstat.doc_id = q.doc_id
         |  WHERE NOT vstat.is_static),
-        |msgurl AS (
+        |msgurl AS MATERIALIZED (
         |  SELECT d.doc_id,
         |    (CASE WHEN d.doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END) || '://' ||
         |    ['News.Example.COM', 'BLOG.Example.org', 'Wiki.EXAMPLE.net',
@@ -7686,7 +7542,7 @@ object SparkEntry {
         |    (CASE WHEN d.doc_id % 2 = 1
         |      THEN '#sec-' || CAST(d.doc_id % 4 AS VARCHAR) ELSE '' END) AS url
         |  FROM documents d JOIN s1 USING (doc_id)),
-        |uq AS (
+        |uq AS MATERIALIZED (
         |  SELECT doc_id,
         |    lower(regexp_extract(regexp_replace(url, '#.*$', ''),
         |      '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
@@ -7695,7 +7551,7 @@ object SparkEntry {
         |    regexp_extract(regexp_replace(url, '#.*$', ''),
         |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(.*)$', 1) AS rest
         |  FROM msgurl),
-        |ur AS (
+        |ur AS MATERIALIZED (
         |  SELECT doc_id, scheme,
         |    CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
         |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
@@ -7705,67 +7561,67 @@ object SparkEntry {
         |      x -> x <> '' AND NOT regexp_matches(x,
         |        '^(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid|ref|igshid)='))) AS params
         |  FROM uq),
-        |canon AS (
+        |canon AS MATERIALIZED (
         |  SELECT doc_id,
         |    scheme || '://' || host ||
         |    (CASE WHEN path0 = '' THEN '/' ELSE path0 END) ||
         |    (CASE WHEN len(params) > 0
         |      THEN '?' || array_to_string(params, '&') ELSE '' END) AS canonical_url
         |  FROM ur),
-        |s2 AS (SELECT MIN(doc_id) AS doc_id FROM canon GROUP BY canonical_url),
-        |txt AS (
+        |s2 AS MATERIALIZED (SELECT MIN(doc_id) AS doc_id FROM canon GROUP BY canonical_url),
+        |txt AS MATERIALIZED (
         |  SELECT d.doc_id,
         |    CASE WHEN d.doc_id % 7 = 3 AND donor.text IS NOT NULL
         |      THEN donor.text ELSE d.text END AS text
         |  FROM documents d LEFT JOIN documents donor
         |    ON donor.doc_id = d.doc_id - 1),
-        |s3 AS (SELECT MIN(t.doc_id) AS doc_id FROM txt t JOIN s2 USING (doc_id)
+        |s3 AS MATERIALIZED (SELECT MIN(t.doc_id) AS doc_id FROM txt t JOIN s2 USING (doc_id)
         |       GROUP BY t.text),
-        |js AS (SELECT g.doc_id, g.key, g.bump, g.w, g.h, unnest(range(0, 7)) AS j
+        |js AS MATERIALIZED (SELECT g.doc_id, g.key, g.bump, g.w, g.h, unnest(range(0, 7)) AS j
         |  FROM geo g JOIN s3 USING (doc_id)),
-        |g0 AS (SELECT doc_id, key, bump, w, h, j, unnest(range(0, 10)) AS i FROM js),
-        |grid AS (SELECT doc_id, key, bump, j, i,
+        |g0 AS MATERIALIZED (SELECT doc_id, key, bump, w, h, j, unnest(range(0, 10)) AS i FROM js),
+        |grid AS MATERIALIZED (SELECT doc_id, key, bump, j, i,
         |  ((2*i+1)*w) // 20 AS x, ((2*j+1)*h) // 14 AS y FROM g0),
-        |lum AS (SELECT doc_id, j, i,
+        |lum AS MATERIALIZED (SELECT doc_id, j, i,
         |  299 * (CASE WHEN x = 0 AND y = 0
         |    THEN ((key*7 + x*37 + y*59 + x*y*13) % 256 + bump) % 256
         |    ELSE (key*7 + x*37 + y*59 + x*y*13) % 256 END)
         |  + 587 * ((key*11 + x*23 + y*41 + x*y*7) % 256)
         |  + 114 * ((key*13 + x*29 + y*31 + x*y*17) % 256) AS l
         |  FROM grid),
-        |bits AS (SELECT a.doc_id, a.j, a.i,
+        |bits AS MATERIALIZED (SELECT a.doc_id, a.j, a.i,
         |    CASE WHEN b.l > a.l THEN 1 ELSE 0 END AS bit
         |  FROM lum a JOIN lum b ON b.doc_id = a.doc_id AND b.j = a.j AND b.i = a.i + 1
         |  WHERE a.i < 9),
-        |hsh AS (SELECT doc_id,
+        |hsh AS MATERIALIZED (SELECT doc_id,
         |  CAST(SUM(CAST(bit AS BIGINT) << (j*9 + i)) AS BIGINT) AS dhash
         |  FROM bits GROUP BY doc_id),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT a.doc_id AS src, b.doc_id AS dst
         |  FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
         |  WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
-        |edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+        |edges AS MATERIALIZED (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
         |walk(node, label) AS (
         |  SELECT doc_id, doc_id FROM s3
         |  UNION
         |  SELECT e.dst AS node, w.label FROM walk w JOIN edges e ON e.src = w.node),
-        |lab AS (SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node),
-        |s4 AS (SELECT doc_id FROM lab WHERE cluster_id = doc_id),
-        |vsig4 AS (SELECT v.* FROM vsig v JOIN s4 ON s4.doc_id = v.doc_id),
-        |vpairs AS (
+        |lab AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node),
+        |s4 AS MATERIALIZED (SELECT doc_id FROM lab WHERE cluster_id = doc_id),
+        |vsig4 AS MATERIALIZED (SELECT v.* FROM vsig v JOIN s4 ON s4.doc_id = v.doc_id),
+        |vpairs AS MATERIALIZED (
         |  SELECT a.doc_id AS src, b.doc_id AS dst
         |  FROM vsig4 a JOIN vsig4 b ON b.doc_id > a.doc_id AND b.sj = a.sj
         |  GROUP BY a.doc_id, b.doc_id
         |  HAVING SUM(bit_count(xor(a.dhash, b.dhash))) <= 3),
-        |vedges AS (SELECT src, dst FROM vpairs UNION ALL SELECT dst, src FROM vpairs),
+        |vedges AS MATERIALIZED (SELECT src, dst FROM vpairs UNION ALL SELECT dst, src FROM vpairs),
         |vwalk(node, label) AS (
         |  SELECT doc_id, doc_id FROM s4
         |  UNION
         |  SELECT e.dst AS node, w.label FROM vwalk w JOIN vedges e ON e.src = w.node),
-        |vlab AS (SELECT node AS doc_id, MIN(label) AS cluster_id
+        |vlab AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS cluster_id
         |  FROM vwalk GROUP BY node),
-        |s5 AS (SELECT doc_id FROM vlab WHERE cluster_id = doc_id),
-        |tok AS (
+        |s5 AS MATERIALIZED (SELECT doc_id FROM vlab WHERE cluster_id = doc_id),
+        |tok AS MATERIALIZED (
         |  SELECT t.doc_id,
         |    CAST(len(list_filter(string_split(t.text, ' '), x -> x <> '')) AS BIGINT)
         |      AS n_tokens,
@@ -7773,9 +7629,9 @@ object SparkEntry {
         |      x -> (((('0x' || substr(md5(x || chr(1) || '0'), 1, 15))::BIGINT % 1024)
         |        * 2654435761) % 1997) - 998) ) AS sum_milli
         |  FROM txt t),
-        |s6 AS (SELECT s5.doc_id FROM s5 JOIN tok USING (doc_id)
+        |s6 AS MATERIALIZED (SELECT s5.doc_id FROM s5 JOIN tok USING (doc_id)
         |       WHERE n_tokens > 0 AND sum_milli >= 0),
-        |stg AS (
+        |stg AS MATERIALIZED (
         |  SELECT 0 AS stage, 'input' AS stage_name, COUNT(*) AS n_docs,
         |    COALESCE(SUM(n_tokens), 0) AS n_tokens FROM documents JOIN tok USING (doc_id)
         |  UNION ALL SELECT 1, 'junk_media', COUNT(*), COALESCE(SUM(n_tokens), 0)
@@ -8789,8 +8645,10 @@ object SparkEntry {
     // minhash CTEs run ONCE over seed docs + each day's text reps;
     // only the band-join MEMBERSHIP (and its is_new labeling — a
     // day-1 novel rep is a STORED side in days 2-3) varies per day
+    // every CTE is AS MATERIALIZED: DuckDB 1.0 inlines CTEs, and this
+    // chain of CTEs that reference earlier ones then outgrows memory
     "q_doc_ingest_chain" ->
-      """WITH msgurl AS (
+      """WITH msgurl AS MATERIALIZED (
         |  SELECT doc_id,
         |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END) || '://' ||
         |    ['News.Example.COM', 'BLOG.Example.org', 'Wiki.EXAMPLE.net',
@@ -8807,7 +8665,7 @@ object SparkEntry {
         |    (CASE WHEN doc_id % 2 = 1
         |      THEN '#sec-' || CAST(doc_id % 4 AS VARCHAR) ELSE '' END) AS url
         |  FROM documents),
-        |uq AS (
+        |uq AS MATERIALIZED (
         |  SELECT doc_id,
         |    lower(regexp_extract(regexp_replace(url, '#.*$', ''),
         |      '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
@@ -8816,7 +8674,7 @@ object SparkEntry {
         |    regexp_extract(regexp_replace(url, '#.*$', ''),
         |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(.*)$', 1) AS rest
         |  FROM msgurl),
-        |ur AS (
+        |ur AS MATERIALIZED (
         |  SELECT doc_id, scheme,
         |    CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
         |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
@@ -8826,26 +8684,26 @@ object SparkEntry {
         |      x -> x <> '' AND NOT regexp_matches(x,
         |        '^(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid|ref|igshid)='))) AS params
         |  FROM uq),
-        |canon AS (
+        |canon AS MATERIALIZED (
         |  SELECT doc_id,
         |    scheme || '://' || host ||
         |    (CASE WHEN path0 = '' THEN '/' ELSE path0 END) ||
         |    (CASE WHEN len(params) > 0
         |      THEN '?' || array_to_string(params, '&') ELSE '' END) AS canonical_url
         |  FROM ur),
-        |spl AS (SELECT doc_id,
+        |spl AS MATERIALIZED (SELECT doc_id,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::INTEGER % 3 = 0 AS seed,
         |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 3, 1) < '6' THEN 1
         |         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 3, 1) < 'b' THEN 2
         |         ELSE 3 END AS day
         |  FROM documents),
-        |txt AS (
+        |txt AS MATERIALIZED (
         |  SELECT d.doc_id,
         |    CASE WHEN d.doc_id % 7 = 3 AND donor.text IS NOT NULL
         |      THEN donor.text ELSE d.text END AS text
         |  FROM documents d LEFT JOIN documents donor
         |    ON donor.doc_id = d.doc_id - 1),
-        |tok AS (
+        |tok AS MATERIALIZED (
         |  SELECT t.doc_id,
         |    CAST(len(list_filter(string_split(t.text, ' '), x -> x <> '')) AS BIGINT)
         |      AS n_tokens,
@@ -8853,48 +8711,48 @@ object SparkEntry {
         |      x -> (((('0x' || substr(md5(x || chr(1) || '0'), 1, 15))::BIGINT % 1024)
         |        * 2654435761) % 1997) - 998)) AS sum_milli
         |  FROM txt t JOIN spl p ON p.doc_id = t.doc_id WHERE NOT p.seed),
-        |tmin1 AS (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
+        |tmin1 AS MATERIALIZED (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
         |  JOIN spl p ON p.doc_id = t.doc_id
         |  WHERE NOT p.seed AND p.day = 1 GROUP BY t.text),
-        |tmin2 AS (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
+        |tmin2 AS MATERIALIZED (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
         |  JOIN spl p ON p.doc_id = t.doc_id
         |  WHERE NOT p.seed AND p.day = 2 GROUP BY t.text),
-        |tmin3 AS (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
+        |tmin3 AS MATERIALIZED (SELECT t.text, MIN(t.doc_id) AS text_min FROM txt t
         |  JOIN spl p ON p.doc_id = t.doc_id
         |  WHERE NOT p.seed AND p.day = 3 GROUP BY t.text),
-        |sigdocs AS (
+        |sigdocs AS MATERIALIZED (
         |  SELECT t.doc_id, t.text FROM txt t
         |    JOIN spl p ON p.doc_id = t.doc_id WHERE p.seed
         |  UNION ALL SELECT text_min AS doc_id, text FROM tmin1
         |  UNION ALL SELECT text_min AS doc_id, text FROM tmin2
         |  UNION ALL SELECT text_min AS doc_id, text FROM tmin3),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS l FROM sigdocs),
-        |sh AS (
+        |toks AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS l FROM sigdocs),
+        |sh AS MATERIALIZED (
         |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(l) - 3),
         |    i -> array_to_string(l[i:i+4], ' ')))) AS shingle
         |  FROM toks WHERE len(l) >= 5),
-        |mins AS (
+        |mins AS MATERIALIZED (
         |  SELECT doc_id, seeds.i,
         |    min(('0x' || substr(md5(shingle || chr(1) || CAST(seeds.i AS VARCHAR)),
         |      1, 15))::BIGINT) AS h
         |  FROM sh CROSS JOIN (SELECT unnest(range(16)) AS i) seeds
         |  GROUP BY doc_id, seeds.i),
-        |bands AS (
+        |bands AS MATERIALIZED (
         |  SELECT a.doc_id, a.i // 2 AS band_idx,
         |    CAST(a.h AS VARCHAR) || ':' || CAST(b.h AS VARCHAR) AS band_key
         |  FROM mins a JOIN mins b ON a.doc_id = b.doc_id AND b.i = a.i + 1
         |  WHERE a.i % 2 = 0),
-        |scanon1 AS (SELECT DISTINCT c.canonical_url FROM canon c
+        |scanon1 AS MATERIALIZED (SELECT DISTINCT c.canonical_url FROM canon c
         |  JOIN spl p ON p.doc_id = c.doc_id WHERE p.seed),
-        |stext1 AS (SELECT DISTINCT t.text FROM txt t
+        |stext1 AS MATERIALIZED (SELECT DISTINCT t.text FROM txt t
         |  JOIN spl p ON p.doc_id = t.doc_id WHERE p.seed),
-        |numin1 AS (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
+        |numin1 AS MATERIALIZED (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
         |  JOIN spl p ON p.doc_id = c.doc_id
         |  WHERE NOT p.seed AND p.day = 1 GROUP BY c.canonical_url),
-        |mem1 AS (
+        |mem1 AS MATERIALIZED (
         |  SELECT doc_id, FALSE AS is_new FROM spl WHERE seed
         |  UNION ALL SELECT text_min AS doc_id, TRUE FROM tmin1),
-        |cand1 AS (
+        |cand1 AS MATERIALIZED (
         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
         |    mx.is_new AS a_new, my.is_new AS b_new
         |  FROM bands x JOIN mem1 mx ON mx.doc_id = x.doc_id
@@ -8902,18 +8760,18 @@ object SparkEntry {
         |    AND x.doc_id < y.doc_id
         |  JOIN mem1 my ON my.doc_id = y.doc_id
         |  WHERE mx.is_new OR my.is_new),
-        |est1 AS (
+        |est1 AS MATERIALIZED (
         |  SELECT c.doc_a, c.doc_b, c.a_new, c.b_new,
         |    round(sum(CASE WHEN ma.h = mb.h THEN 1 ELSE 0 END) / 16.0, 6) AS ej
         |  FROM cand1 c
         |  JOIN mins ma ON ma.doc_id = c.doc_a
         |  JOIN mins mb ON mb.doc_id = c.doc_b AND mb.i = ma.i
         |  GROUP BY 1, 2, 3, 4),
-        |hits1 AS (SELECT * FROM est1 WHERE ej >= 0.5),
-        |nds1 AS (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
+        |hits1 AS MATERIALIZED (SELECT * FROM est1 WHERE ej >= 0.5),
+        |nds1 AS MATERIALIZED (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
         |  FROM hits1 WHERE a_new <> b_new),
-        |ndn1 AS (SELECT DISTINCT doc_b AS rep FROM hits1 WHERE a_new AND b_new),
-        |aud1 AS (
+        |ndn1 AS MATERIALIZED (SELECT DISTINCT doc_b AS rep FROM hits1 WHERE a_new AND b_new),
+        |aud1 AS MATERIALIZED (
         |  SELECT t.doc_id,
         |    sc.canonical_url IS NOT NULL AS url_dup_stored,
         |    t.doc_id <> u.url_min AS url_dup_new,
@@ -8939,19 +8797,19 @@ object SparkEntry {
         |  LEFT JOIN nds1 ON nds1.rep = tm.text_min
         |  LEFT JOIN ndn1 ON ndn1.rep = tm.text_min
         |  LEFT JOIN tok k ON k.doc_id = t.doc_id),
-        |nov1 AS (SELECT doc_id FROM aud1 WHERE novel),
-        |scanon2 AS (SELECT canonical_url FROM scanon1
+        |nov1 AS MATERIALIZED (SELECT doc_id FROM aud1 WHERE novel),
+        |scanon2 AS MATERIALIZED (SELECT canonical_url FROM scanon1
         |  UNION SELECT c.canonical_url FROM canon c JOIN nov1 ON nov1.doc_id = c.doc_id),
-        |stext2 AS (SELECT text FROM stext1
+        |stext2 AS MATERIALIZED (SELECT text FROM stext1
         |  UNION SELECT t.text FROM txt t JOIN nov1 ON nov1.doc_id = t.doc_id),
-        |numin2 AS (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
+        |numin2 AS MATERIALIZED (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
         |  JOIN spl p ON p.doc_id = c.doc_id
         |  WHERE NOT p.seed AND p.day = 2 GROUP BY c.canonical_url),
-        |mem2 AS (
+        |mem2 AS MATERIALIZED (
         |  SELECT doc_id, FALSE AS is_new FROM spl WHERE seed
         |  UNION ALL SELECT doc_id, FALSE FROM nov1
         |  UNION ALL SELECT text_min AS doc_id, TRUE FROM tmin2),
-        |cand2 AS (
+        |cand2 AS MATERIALIZED (
         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
         |    mx.is_new AS a_new, my.is_new AS b_new
         |  FROM bands x JOIN mem2 mx ON mx.doc_id = x.doc_id
@@ -8959,18 +8817,18 @@ object SparkEntry {
         |    AND x.doc_id < y.doc_id
         |  JOIN mem2 my ON my.doc_id = y.doc_id
         |  WHERE mx.is_new OR my.is_new),
-        |est2 AS (
+        |est2 AS MATERIALIZED (
         |  SELECT c.doc_a, c.doc_b, c.a_new, c.b_new,
         |    round(sum(CASE WHEN ma.h = mb.h THEN 1 ELSE 0 END) / 16.0, 6) AS ej
         |  FROM cand2 c
         |  JOIN mins ma ON ma.doc_id = c.doc_a
         |  JOIN mins mb ON mb.doc_id = c.doc_b AND mb.i = ma.i
         |  GROUP BY 1, 2, 3, 4),
-        |hits2 AS (SELECT * FROM est2 WHERE ej >= 0.5),
-        |nds2 AS (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
+        |hits2 AS MATERIALIZED (SELECT * FROM est2 WHERE ej >= 0.5),
+        |nds2 AS MATERIALIZED (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
         |  FROM hits2 WHERE a_new <> b_new),
-        |ndn2 AS (SELECT DISTINCT doc_b AS rep FROM hits2 WHERE a_new AND b_new),
-        |aud2 AS (
+        |ndn2 AS MATERIALIZED (SELECT DISTINCT doc_b AS rep FROM hits2 WHERE a_new AND b_new),
+        |aud2 AS MATERIALIZED (
         |  SELECT t.doc_id,
         |    sc.canonical_url IS NOT NULL AS url_dup_stored,
         |    t.doc_id <> u.url_min AS url_dup_new,
@@ -8996,20 +8854,20 @@ object SparkEntry {
         |  LEFT JOIN nds2 ON nds2.rep = tm.text_min
         |  LEFT JOIN ndn2 ON ndn2.rep = tm.text_min
         |  LEFT JOIN tok k ON k.doc_id = t.doc_id),
-        |nov2 AS (SELECT doc_id FROM aud2 WHERE novel),
-        |scanon3 AS (SELECT canonical_url FROM scanon2
+        |nov2 AS MATERIALIZED (SELECT doc_id FROM aud2 WHERE novel),
+        |scanon3 AS MATERIALIZED (SELECT canonical_url FROM scanon2
         |  UNION SELECT c.canonical_url FROM canon c JOIN nov2 ON nov2.doc_id = c.doc_id),
-        |stext3 AS (SELECT text FROM stext2
+        |stext3 AS MATERIALIZED (SELECT text FROM stext2
         |  UNION SELECT t.text FROM txt t JOIN nov2 ON nov2.doc_id = t.doc_id),
-        |numin3 AS (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
+        |numin3 AS MATERIALIZED (SELECT c.canonical_url, MIN(c.doc_id) AS url_min FROM canon c
         |  JOIN spl p ON p.doc_id = c.doc_id
         |  WHERE NOT p.seed AND p.day = 3 GROUP BY c.canonical_url),
-        |mem3 AS (
+        |mem3 AS MATERIALIZED (
         |  SELECT doc_id, FALSE AS is_new FROM spl WHERE seed
         |  UNION ALL SELECT doc_id, FALSE FROM nov1
         |  UNION ALL SELECT doc_id, FALSE FROM nov2
         |  UNION ALL SELECT text_min AS doc_id, TRUE FROM tmin3),
-        |cand3 AS (
+        |cand3 AS MATERIALIZED (
         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
         |    mx.is_new AS a_new, my.is_new AS b_new
         |  FROM bands x JOIN mem3 mx ON mx.doc_id = x.doc_id
@@ -9017,18 +8875,18 @@ object SparkEntry {
         |    AND x.doc_id < y.doc_id
         |  JOIN mem3 my ON my.doc_id = y.doc_id
         |  WHERE mx.is_new OR my.is_new),
-        |est3 AS (
+        |est3 AS MATERIALIZED (
         |  SELECT c.doc_a, c.doc_b, c.a_new, c.b_new,
         |    round(sum(CASE WHEN ma.h = mb.h THEN 1 ELSE 0 END) / 16.0, 6) AS ej
         |  FROM cand3 c
         |  JOIN mins ma ON ma.doc_id = c.doc_a
         |  JOIN mins mb ON mb.doc_id = c.doc_b AND mb.i = ma.i
         |  GROUP BY 1, 2, 3, 4),
-        |hits3 AS (SELECT * FROM est3 WHERE ej >= 0.5),
-        |nds3 AS (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
+        |hits3 AS MATERIALIZED (SELECT * FROM est3 WHERE ej >= 0.5),
+        |nds3 AS MATERIALIZED (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS rep
         |  FROM hits3 WHERE a_new <> b_new),
-        |ndn3 AS (SELECT DISTINCT doc_b AS rep FROM hits3 WHERE a_new AND b_new),
-        |aud3 AS (
+        |ndn3 AS MATERIALIZED (SELECT DISTINCT doc_b AS rep FROM hits3 WHERE a_new AND b_new),
+        |aud3 AS MATERIALIZED (
         |  SELECT t.doc_id,
         |    sc.canonical_url IS NOT NULL AS url_dup_stored,
         |    t.doc_id <> u.url_min AS url_dup_new,

@@ -308,20 +308,6 @@ object StressBench {
       p
     }
     if (selected("ivf_truncated_probe_d16")) { ivfPrefixStoreDir; () }
-    // round-18 session 2: the same corpus under the VERSIONED layout
-    // (untimed publish of store_v1); the timed rows below price the
-    // windowless swap against the flat compact — same staged rewrite
-    // plus one atomic marker create + retain-2 GC — and the per-query
-    // resolve (one bounded manifest listing)
-    lazy val ivfVerBase = {
-      val p = stressTmp("graft_stress_ivf_ver")
-      ext.StoreVersioning.publish(spark, p) { root =>
-        ext.Similarity.ivfIndexStoreInit(embPq, root)
-      }
-      p
-    }
-    if (Seq("ivf_store_versioned_publish", "store_version_resolve")
-        .exists(selected)) { ivfVerBase; () }
     // round-18 session 2: the MANIFESTED store over the SAME corpus as
     // ivf_store_compact's flat store, with one pending day of ~50
     // near-identical vectors (a planted single-cluster batch) that all
@@ -643,16 +629,6 @@ object StressBench {
       }),
       time("ivf_store_compact", ext.Similarity.ivfIndexStoreCompact(
         spark, ivfStoreDir).count()),
-      // round-18 session 2: the SAME fold through the versioned swap —
-      // publish of store_v2 via one atomic marker create instead of
-      // the double rename; the delta vs ivf_store_compact is the
-      // manifest's whole cost (expected ~0: the rewrite dominates)
-      time("ivf_store_versioned_publish", ext.Similarity.ivfIndexStoreCompact(
-        spark, ext.StoreVersioning.resolve(spark, ivfVerBase)).count()),
-      // the per-query pointer read, ×100: one bounded manifest listing
-      // each — the whole price every probe pays for windowless reads
-      time("store_version_resolve", (1 to 100).map(_ =>
-        ext.StoreVersioning.resolve(spark, ivfVerBase).length.toLong).sum),
       // the incremental fold A/B against ivf_store_compact (same
       // corpus, same store bytes): one pending single-list day folded
       // by rewriting ONE partition's files + one manifest commit vs the

@@ -5,11 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Jobs
 
-/** FILE-LIST MANIFEST table (round 18, session 2) — the granularity
-  * [[StoreVersioning]] cannot reach. The store-level manifest makes
-  * whole-store swaps windowless, but an INCREMENTAL fold (day rows
-  * into only their affected partitions, days retired) is impossible
-  * over raw directories: between the partition swaps and the day-dir
+/** FILE-LIST MANIFEST table (round 18, session 2) — the one snapshot
+  * protocol of the stores: a reader pinned across a rewrite, a
+  * retained prior version for time travel, and GC that unlinks the
+  * manifest before the data. An INCREMENTAL fold (day rows into only
+  * their affected partitions, days retired) is impossible over raw
+  * directories: between the partition swaps and the day-dir
   * deletes a reader counts folded rows TWICE, and no rename ordering
   * fixes it — the flip must cover data files AND day visibility in one
   * atomic act. The industry answer (Iceberg/Delta) is snapshots that
@@ -49,9 +50,10 @@ import graft.Jobs
   * partitions' files.
   *
   * GC retains the newest `retain` manifests (the in-flight-reader
-  * grace, like [[StoreVersioning]]) and deletes data dirs referenced
-  * by NONE of them — old manifests first, so nothing resolvable ever
-  * points at deleted files.
+  * grace: a reader that resolved the previous snapshot finishes on its
+  * files, and [[snapshotAt]] time-travels to any retained version) and
+  * deletes data dirs referenced by NONE of them — old manifests first,
+  * so nothing resolvable ever points at deleted files.
   */
 object ManifestedTable {
 
@@ -172,13 +174,12 @@ object ManifestedTable {
     * sees a torn manifest. The exists-check catches a replayed commit
     * of the same version (the realistic single-writer failure), and on
     * HDFS-semantics filesystems a rename onto an existing version also
-    * refuses. TRUE concurrent writers are OUTSIDE this table's
-    * contract (single-writer, like every store mutation in this repo —
-    * POSIX rename(2) replaces an existing file silently, so the local
-    * filesystem cannot make a same-version double-commit loud at this
-    * layer); [[StoreVersioning.publish]]'s marker protocol is the
-    * multi-writer-detecting variant, bought by keeping its manifest
-    * content-free.
+    * refuses. The contract is SINGLE-WRITER, like every store mutation
+    * in this repo: one writer commits at a time, and TRUE concurrent
+    * writers are outside it. POSIX rename(2) replaces an existing file
+    * silently, so on the local filesystem two writers racing between
+    * the exists-check and the rename can both succeed, the later
+    * manifest winning; nothing here detects that race.
     */
   def commit(spark: SparkSession, tbl: String, snap: Snapshot): Unit = {
     val m = manifestDir(tbl)

@@ -1774,7 +1774,7 @@ object Similarity {
     * (target → old, staging → target, rollback on failure) swaps it
     * live.
     *
-    * SINGLE-READER CONTRACT — FLAT LAYOUT ONLY (round 18, spec-pinned):
+    * SINGLE-READER CONTRACT (round 18, spec-pinned):
     * between the two renames there is an instant where NO live store
     * root exists. A crashed writer in that window self-heals
     * (`storeSwapRecover` enumerates exactly these states), but a
@@ -1784,25 +1784,12 @@ object Similarity {
     * half-swapped MIX: the store root moves as one rename). The flat
     * single-writer stores quiesce reads across compact/train, the same
     * contract a delete already imposes
-    * (see [[graft.ext.TextOps.bm25IndexDelete]]).
-    *
-    * VERSIONED BRANCH (round 18, session 2): when `dir` is a published
-    * `store_v{N}` root under a [[StoreVersioning]] manifest, the swap
-    * is NOT a double rename — the whole next store is staged as the
-    * sibling `store_v{N+1}` and committed with one atomic marker
-    * creation. No instant without a live root exists; a reader that
-    * resolved v{N} before the publish finishes on v{N}'s untouched
-    * bytes (GC retains the previous version for exactly that reader).
-    * Returns the live root after the swap — `dir` itself in flat
-    * layout, the NEW version root when versioned; post-swap reads must
-    * use the returned root, never the argument.
+    * (see [[graft.ext.TextOps.bm25IndexDelete]]). A reader that must
+    * stay pinned across a rewrite reads a [[ManifestedTable]] snapshot
+    * instead.
     */
   private[ext] def stageThenSwap(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String)(stage: String => Unit): String = {
-    if (StoreVersioning.isVersionRoot(spark, dir)) {
-      val base = new org.apache.hadoop.fs.Path(dir).getParent.toString
-      return StoreVersioning.publish(spark, base)(stage)
-    }
+                                 dir: String)(stage: String => Unit): Unit = {
     val target = new org.apache.hadoop.fs.Path(dir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(
@@ -1820,7 +1807,6 @@ object Similarity {
       throw new java.io.IOException(s"rename $staging -> $target failed")
     }
     fs.delete(old, true)
-    dir
   }
 
   /** DELETE vectors from the persisted index (`q_ivf_store_delete`) —
@@ -2779,7 +2765,7 @@ object Similarity {
     occupancySummary(spark, dir, ivfIndexStoreLiveAssignments(spark, dir))
 
   /** The occupancy aggregate over an explicit live-rows frame — ONE
-    * copy shared by the flat/versioned store and the manifested
+    * copy shared by the flat store and the manifested
     * incremental store ([[ManifestedTable]]), whose live view resolves
     * differently but whose centroids table and occupancy law are
     * identical.
@@ -2832,7 +2818,7 @@ object Similarity {
         s"no IVF index store (live, old, or staged) at $dir")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = stageThenSwap(spark, dir) { staging =>
+    stageThenSwap(spark, dir) { staging =>
       // ONE persisted pass over the live view feeds every staged
       // artifact (rows, sidecar cells, prefix truncations — no staged-
       // byte read-backs), and the independent staged writes run as
@@ -2888,7 +2874,7 @@ object Similarity {
             pqThunk ++ prefixThunk)
       } finally rows.unpersist(blocking = false)
     }
-    ivfIndexStoreOccupancy(spark, live)
+    ivfIndexStoreOccupancy(spark, dir)
   }
 
   /** Re-seed + re-assign the PERSISTED index in place — the lifecycle
@@ -2961,7 +2947,7 @@ object Similarity {
     }
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = stageThenSwap(spark, dir) { staging =>
+    stageThenSwap(spark, dir) { staging =>
       // every staged write reads the still-live target or the PERSISTED
       // trained-assignment frame, and finishes before any rename — no
       // lineage reaches the swapped paths afterwards. The frame is
@@ -3067,7 +3053,7 @@ object Similarity {
         codes.unpersist(blocking = false)
       }
     }
-    ivfIndexStoreOccupancy(spark, live)
+    ivfIndexStoreOccupancy(spark, dir)
   }
 
   // ───────────────────── product-quantization (PQ) tier ─────────────────────

@@ -686,10 +686,8 @@ object TextOps {
     * same enumerated-states recovery every other store uses — and the
     * invariance law is hash-certified: the served ranking over the
     * compacted store equals the union build (`q_bm25_store_compact`
-    * shares `q_bm25`'s oracle). Returns the live root after the swap —
-    * `dir` in flat layout, the NEW version root when `dir` is a
-    * published [[graft.ext.StoreVersioning]] root (post-compact reads
-    * must use the return, never the argument).
+    * shares `q_bm25`'s oracle). Returns `dir`, where the compacted
+    * store is live after the swap.
     */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
                        dir: String): String = {
@@ -721,6 +719,7 @@ object TextOps {
         () => lexStatsDf(spark, nDocs, totalLen, nBuckets)
           .write.parquet(s"$staging/corpus_stats")))
     }
+    dir
   }
 
   /** Build the PERSISTED lexical index (round 17) — the `lloyd_stats`

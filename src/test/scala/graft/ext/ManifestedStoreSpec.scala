@@ -20,7 +20,12 @@ import graft.SparkSpec
   *   5. the sidecar equals the per-cell aggregate of the manifested
   *      rows after every fold;
   *   6. day/tombstone cells retire only once EVERY retained manifest
-  *      has them folded (a graced reader may still need them).
+  *      has them folded (a graced reader may still need them);
+  *   7. a replayed commit of a committed version fails loud and never
+  *      replaces the committed manifest;
+  *   8. a retained prior version time-travels to its own rows, and GC
+  *      unlinks manifests before data: a GC interrupted between the
+  *      two leaves only unreferenced data, which the next GC deletes.
   */
 class ManifestedStoreSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -36,6 +41,12 @@ class ManifestedStoreSpec extends AnyFunSuite with SparkSpec {
   private def idSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int)] =
     df.select("vec_id", "centroid_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
+  private def idsAt(tbl: String, v: Long): Set[Long] =
+    ManifestedTable.read(spark, tbl, ManifestedTable.snapshotAt(spark, tbl, v))
+      .select("vec_id").as[Long].collect().toSet
+  /** vec_id rows of the test corpus, partitioned four ways. */
+  private def partRows =
+    emb.select(col("vec_id"), (col("vec_id") % 4).cast("int").as("part"))
 
   test("manifested init serves the flat store's rows, occupancy, and " +
     "probe verbatim") {
@@ -375,6 +386,71 @@ class ManifestedStoreSpec extends AnyFunSuite with SparkSpec {
     assert(!dirty.getAs[Boolean]("rows_ok"))
     assert(dirty.getAs[Long]("manifest_rows") -
       dirty.getAs[Long]("file_rows") === victim.rows)
+  }
+
+  test("a replayed commit of a committed version fails loud; the first " +
+    "manifest's entries read back unchanged") {
+    val tbl = tmp("graft_mf_replay")
+    val snap = ManifestedTable.Snapshot(1L,
+      ManifestedTable.writeData(spark, tbl, 1L, partRows, "part"), Nil, Nil)
+    ManifestedTable.commit(spark, tbl, snap)
+    // the replay: same version, different content
+    val replay = snap.copy(entries = snap.entries.take(1), foldedDays = Seq(0L))
+    val e = intercept[java.io.IOException] {
+      ManifestedTable.commit(spark, tbl, replay)
+    }
+    assert(e.getMessage.contains("already committed"))
+    assert(ManifestedTable.versions(spark, tbl) === Seq(1L))
+    assert(ManifestedTable.snapshotAt(spark, tbl, 1L) === snap)
+    assert(idsAt(tbl, 1L) ===
+      partRows.select("vec_id").as[Long].collect().toSet)
+  }
+
+  test("time travel and gc: a retained prior snapshot reads its own rows; " +
+    "gc unlinks manifests before data, and the data only v1 named goes") {
+    val tbl = tmp("graft_mf_gc")
+    val all = partRows
+    val half = all.filter(hashHalf < "8")
+    val allIds = all.select("vec_id").as[Long].collect().toSet
+    val halfIds = half.select("vec_id").as[Long].collect().toSet
+    assert(halfIds.nonEmpty && halfIds.size < allIds.size)
+    def commit(v: Long, entries: Seq[ManifestedTable.Entry]) = {
+      val snap = ManifestedTable.Snapshot(v, entries, Nil, Nil)
+      ManifestedTable.commit(spark, tbl, snap)
+      snap
+    }
+    def path(rel: String) = new org.apache.hadoop.fs.Path(s"$tbl/$rel")
+    val s1 = commit(1L, ManifestedTable.writeData(spark, tbl, 1L, half, "part"))
+    val s2 = commit(2L, ManifestedTable.writeData(spark, tbl, 2L, all, "part"))
+    // time travel: the previous version serves the previous rows
+    assert(idsAt(tbl, 1L) === halfIds)
+    assert(idsAt(tbl, 2L) === allIds)
+    // v3 carries v2's files for parts 0-1 and rewrites parts 2-3
+    commit(3L, s2.entries.filter(_.part < 2) ++ ManifestedTable.writeData(
+      spark, tbl, 3L, all.filter(col("part") >= 2), "part"))
+    // interrupt gc between its phases: v3's manifest is unreadable when
+    // gc collects the kept versions' files
+    val v3 = java.nio.file.Paths.get(s"$tbl/manifest/v3.txt")
+    val v3Bytes = java.nio.file.Files.readAllBytes(v3)
+    java.nio.file.Files.write(v3, "garbage\n".getBytes("UTF-8"))
+    intercept[java.io.IOException](ManifestedTable.gc(spark, tbl, retain = 2))
+    java.nio.file.Files.write(v3, v3Bytes)
+    // manifests went first: v1 no longer resolves, its files remain as
+    // unreferenced data
+    assert(ManifestedTable.versions(spark, tbl) === Seq(2L, 3L))
+    assert(s1.entries.forall(e => fs(tbl).exists(path(e.path))))
+    ManifestedTable.gc(spark, tbl, retain = 2)
+    assert(ManifestedTable.versions(spark, tbl) === Seq(2L, 3L))
+    assert(!fs(tbl).exists(path("manifest/v1.txt")))
+    intercept[java.io.IOException](ManifestedTable.snapshotAt(spark, tbl, 1L))
+    assert(!fs(tbl).exists(path("data/v1")),
+      "data dirs only v1 referenced must be deleted")
+    // v2 and v3 read back in full, each row once
+    for (v <- Seq(2L, 3L)) {
+      assert(idsAt(tbl, v) === allIds)
+      assert(ManifestedTable.read(spark, tbl,
+        ManifestedTable.snapshotAt(spark, tbl, v)).count() === allIds.size)
+    }
   }
 
   test("the pruned probe reads only the probed lists' manifest entries " +

@@ -16,7 +16,10 @@ import graft.SparkSpec
   *   3. a TORN streamed lexical day (postings landed, stats did not)
   *      is invisible to the served view, never under-counted;
   *   4. [[Similarity.ivfIndexStoreProbeFiltered]] treats store ids
-  *      missing from the label frame as keep = false on EVERY side.
+  *      missing from the label frame as keep = false on EVERY side;
+  *   5. the flat whole-store swap ([[Similarity.stageThenSwap]])
+  *      compacts in place: the store keeps serving at its own dir,
+  *      with no manifest beside it.
   */
 class StoreCrashSafetySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -201,6 +204,21 @@ class StoreCrashSafetySpec extends AnyFunSuite with SparkSpec {
     assert(Curation.storeSwapRecover(spark, dir) === "recovered-staging")
     assert(TextOps.bm25StoreTopDocs(spark, dir).collect().map(_.toSeq)
       .toSeq === want.toSeq)
+  }
+
+  test("flat layout is untouched: stageThenSwap double-renames in " +
+    "place and compact returns its own argument") {
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val dir = java.nio.file.Files.createTempDirectory("graft_flat_lex")
+      .toString + "/store"
+    TextOps.bm25IndexInit(docs, dir)
+    val before = TextOps.bm25StoreTopDocs(spark, dir).collect().toSeq
+    val live = TextOps.bm25IndexCompact(spark, dir)
+    assert(live === dir, "flat compact must keep serving the same root")
+    assert(TextOps.bm25StoreTopDocs(spark, dir).collect().toSeq === before)
+    assert(!hadoopFs(dir).exists(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dir).getParent, "manifest")),
+      "flat compact must not invent a manifest")
   }
 
   test("filtered store probe: ids missing from the label frame read as " +

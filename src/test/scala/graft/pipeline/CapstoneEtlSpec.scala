@@ -139,7 +139,8 @@ class CapstoneEtlSpec extends AnyFunSuite with SparkSpec {
     assert(RunCapstone.inputPaths(ReferenceFixtures.cpCfg) === ((labels, demoCsv)))
     val out = java.nio.file.Files.createTempDirectory("capstone_cli").toString
     RunCapstone.run(spark, Seq(ReferenceFixtures.cpCfg, out))
-    val counts = starTables.map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+    val tables = starTables.map(t => t -> spark.read.parquet(s"$out/$t")).toMap
+    val counts = tables.map { case (t, df) => t -> df.count() }
     // every synthesized row with a label-drawn port survives the
     // null-rejection WHERE; the dims are the fixture's label sets ('99'
     // dropped from the states) and its four port-matching cities
@@ -148,6 +149,27 @@ class CapstoneEtlSpec extends AnyFunSuite with SparkSpec {
     assert(counts === Map("immigrations" -> validFact, "port_demographics" -> 4L,
       "country" -> 24L, "port" -> 17L, "state" -> 14L, "mode" -> 4L,
       "visa_type" -> 3L))
+    // column names and Spark types as DATA_DICTIONARY.md lists them,
+    // partition columns included (the dims are all strings)
+    def cols(tpe: String, names: String*) = names.map(_ -> tpe)
+    val dictionary = Map(
+      "immigrations" -> (cols("double", "year", "month", "departure_date",
+        "age", "birth_year", "admission_number") ++ cols("string",
+        "residence_country", "port", "arrival_date", "mode", "state_code",
+        "visa_type_code", "visa_type", "occupation", "gender",
+        "allowed_date", "airline", "flight_number")),
+      "port_demographics" -> (cols("string", "port_code", "city",
+        "state_code") ++ cols("double", "total_male_population",
+        "total_female_population") ++ cols("long", "total_population",
+        "number_of_veterans", "number_of_foreign_born")),
+      "country" -> cols("string", "code", "country_name"),
+      "port" -> cols("string", "code", "city", "state_code"),
+      "state" -> cols("string", "code", "state_name"),
+      "mode" -> cols("string", "code", "mode"),
+      "visa_type" -> cols("string", "code", "visa_type"))
+    val written = tables.map { case (t, df) =>
+      t -> df.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq.sorted }
+    assert(written === dictionary.map { case (t, cs) => t -> cs.sorted })
   }
 
   test("writeStarSchema: an empty gated table fails the gate before any table " +

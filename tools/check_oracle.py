@@ -6,7 +6,9 @@ Usage: check_oracle.py <sfdir> <verify_outdir>
 For each query dir under <verify_outdir>: read the Spark parquet result,
 run the oracle SQL from oracle_sql.json in DuckDB with views over
 <sfdir>/<table>.parquet, sort columns by name + rows by all values, and
-compare exactly. Prints PASS/FAIL per query.
+compare exactly. Prints PASS/FAIL per query, and NOORACLE with the row
+count for a query that has no oracle SQL. Exits 1 when any query fails
+or a NOORACLE query wrote 0 rows, else 0.
 
 DuckDB runs with a fixed memory limit and may spill to a temp dir under
 <verify_outdir>. Its default limit is 80% of host RAM, which on a shared
@@ -59,11 +61,14 @@ def main():
                    if os.path.isdir(os.path.join(outdir, d))
                    and not d.startswith("."))
     n_pass = n_fail = 0
+    empty = []
     for name in names:
         got = con.sql(
             f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')").df()
         if name not in oracle:
             print(f"NOORACLE {name}: rows={len(got)}")
+            if len(got) == 0:
+                empty.append(name)
             continue
         try:
             exp = con.sql(oracle[name]).df()
@@ -101,7 +106,10 @@ def main():
             print(f"PASS {name}: rows={len(g)}{schema_note}")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
+    if empty:
+        print(f"== NOORACLE queries with 0 rows: {', '.join(empty)}")
+    return 1 if n_fail or empty else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -8,6 +8,8 @@ echo "== test"; sbt -batch test 2>&1 | grep -E 'Tests:' | tail -1
 echo "== verify sf0.01"
 rm -rf /tmp/graft_verify && ./tools/run_verify.sh /root/testdata/sf0.01 /tmp/graft_verify 2>&1 | grep '\[verify\]' || true
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify | tail -3
+# the check's own exit status: tail's would hide a failure from set -e
+[ "${PIPESTATUS[0]}" -eq 0 ]
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 AO=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
