@@ -208,11 +208,15 @@ class StoreCrashSafetySpec extends AnyFunSuite with SparkSpec {
 
   test("flat layout is untouched: stageThenSwap double-renames in " +
     "place and compact returns its own argument") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val rng = new scala.util.Random(11)
+    val docs = (0L until 60L).map(id => (id,
+      Seq.fill(5 + rng.nextInt(10))(s"w${rng.nextInt(20)}").mkString(" ")))
+      .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_flat_lex")
       .toString + "/store"
     TextOps.bm25IndexInit(docs, dir)
     val before = TextOps.bm25StoreTopDocs(spark, dir).collect().toSeq
+    assert(before.nonEmpty)
     val live = TextOps.bm25IndexCompact(spark, dir)
     assert(live === dir, "flat compact must keep serving the same root")
     assert(TextOps.bm25StoreTopDocs(spark, dir).collect().toSeq === before)
