@@ -1296,6 +1296,16 @@ object TextOps {
     * postings scan prunes to the same buckets; contributions round to
     * integer micros before the per-doc sum (the order-independence
     * discipline), so the store arm equals the brute arm row for row.
+    *
+    * The query side runs as ONE shuffle-free job: the (query_id, token,
+    * bucket) rows are collected and deduplicated on the driver, and the
+    * bucket list, the query-token join and the df lookup's token list
+    * all come from that fetch as local relations — the
+    * [[graft.ext.Similarity.storeProbeWith]] posture. Nothing is cached
+    * and no job re-reads the query docs. The call runs its store-view
+    * reads, that fetch and the materialization eagerly; the arm comes
+    * back checkpointed (numQueries × arm rows), so a fusion downstream
+    * never re-runs the pruned scan.
     */
   /** Optional `keep`: a (doc_id) frame of ADMISSIBLE result docs —
     * the in-filter strategy on the lexical arm (contributions of
@@ -1306,46 +1316,44 @@ object TextOps {
                         queryDocs: DataFrame, dir: String,
                         arm: Int = 10,
                         keep: Option[DataFrame] = None): DataFrame = {
+    import spark.implicits._
     val (postings, dfreq, nDocs, totalLen, nBuckets) =
       lexStoreView(spark, dir)
-    val qtok = queryDocs
+    val q0 = queryDocs
       .select(col("doc_id").as("query_id"),
         explode(wsTokens(col("text"))).as("token"))
-      .distinct()
       .withColumn("bucket", lexBucket(nBuckets))
-      .persist()
-    try {
-      val buckets = qtok.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // query-vocab df: pruned dfreq buckets, semi-joined to the query
-      // tokens — bounded by the query vocabulary
-      val qdf = dfreq
-        .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-        .join(broadcast(qtok.select("token").distinct()), Seq("token"))
-        .select(col("token"), col("df"))
-      val pruned = postings
-        .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      val admitted = keep.fold(pruned)(ids =>
-        pruned.join(ids.select("doc_id"), Seq("doc_id"), "left_semi"))
-      val contrib = admitted
-        .join(broadcast(qtok.select("query_id", "token")), Seq("token"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .join(broadcast(qdf), Seq("token"))
-        .withColumn("n_docs", lit(nDocs))
-        .withColumn("total_len", lit(totalLen))
-        .withColumn("cm", round(bm25Weight * lit(1000000.0), 0).cast("long"))
-      val lex = contrib.groupBy("query_id", "doc_id")
-        .agg(sum(col("cm")).as("lex_micro"))
-      val wl = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("lex_micro").desc, col("doc_id"))
-      lex.withColumn("lex_rnk", row_number().over(wl))
-        .filter(col("lex_rnk") <= arm)
-        .select("query_id", "doc_id", "lex_rnk")
-        // the probe frame is bounded (numQueries × arm); materialize it
-        // eagerly so the caller's fusion never re-runs the pruned scan
-        .localCheckpoint(true)
-    } finally qtok.unpersist(blocking = false)
+    // rebuilt under q0's own schema, so query_id keeps the caller's type
+    val qRows = q0.collect().distinct
+    val qtok = spark.createDataFrame(java.util.Arrays.asList(qRows: _*),
+      q0.schema).select("query_id", "token")
+    val buckets = qRows.map(r => Integer.valueOf(r.getInt(2))).distinct
+    // query-vocab df: pruned dfreq buckets, semi-joined to the query
+    // tokens — bounded by the query vocabulary
+    val qdf = dfreq
+      .filter(col("bucket").isin(buckets: _*))
+      .join(broadcast(qRows.map(_.getString(1)).distinct.toSeq.toDF("token")),
+        Seq("token"))
+      .select(col("token"), col("df"))
+    val pruned = postings.filter(col("bucket").isin(buckets: _*))
+    val admitted = keep.fold(pruned)(ids =>
+      pruned.join(ids.select("doc_id"), Seq("doc_id"), "left_semi"))
+    val contrib = admitted
+      .join(broadcast(qtok), Seq("token"))
+      .filter(col("doc_id") =!= col("query_id"))
+      .join(broadcast(qdf), Seq("token"))
+      .withColumn("n_docs", lit(nDocs))
+      .withColumn("total_len", lit(totalLen))
+      .withColumn("cm", round(bm25Weight * lit(1000000.0), 0).cast("long"))
+    val lex = contrib.groupBy("query_id", "doc_id")
+      .agg(sum(col("cm")).as("lex_micro"))
+    val wl = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("lex_micro").desc, col("doc_id"))
+    lex.withColumn("lex_rnk", row_number().over(wl))
+      .filter(col("lex_rnk") <= arm)
+      .select("query_id", "doc_id", "lex_rnk")
+      .localCheckpoint(true)
   }
 
   /** Hybrid retrieval (`q_hybrid_rrf`): BM25 lexical ranking fused
@@ -1404,15 +1412,18 @@ object TextOps {
     * so the two arms run as CONCURRENT jobs and each is materialized
     * (`localCheckpoint`, numQueries × arm rows) before the fusion. The
     * call therefore runs these jobs eagerly, each arm on its own
-    * thread: the lexical arm's postings schema inference, its query-
-    * token bucket collect and its checkpoint (pruned scan, integer-micro
-    * sum, window); the IVF arm's centroid collect, its assignments
-    * schema inference, its probe-frame collect (the list ids to prune
-    * to) and its checkpoint (pruned scan, rescore, window). The one-row
-    * `corpus_stats` read and the centroid read use declared schemas, so
-    * neither infers one. Only the fusion (a full-outer join of two
-    * bounded frames, one window, the final sort) runs on the caller's
-    * action.
+    * thread: the lexical arm's stats read, postings schema inference,
+    * ONE shuffle-free fetch of the query side's (query_id, token,
+    * bucket) rows (the bucket list and every query-side broadcast come
+    * from it as local relations) and its checkpoint (pruned dfreq and
+    * postings scans, integer-micro sum, window); the IVF arm's centroid
+    * collect, its assignments schema inference, its probe-frame collect
+    * (the list ids to prune to) and its checkpoint (pruned scan,
+    * rescore, window). The one-row `corpus_stats` read and the centroid
+    * read use declared schemas, so neither infers one. Only the fusion
+    * runs on the caller's action: one range exchange on query_id over
+    * the two bounded arms (its bounds sampled from them), serving the
+    * per-doc merge, the window and the final order ([[fuseRrf]]).
     */
   def hybridRrfStoreTopDocs(queryDocs: DataFrame, queryVecs: DataFrame,
                             lexDir: String, annDir: String,
@@ -1495,14 +1506,29 @@ object TextOps {
       .select("query_id", "doc_id", "lex_rnk")
   }
 
-  /** Rank-only reciprocal-rank fusion of two arm frames
-    * ((query_id, doc_id, lex_rnk) ⋈full (query_id, doc_id, emb_rnk)):
-    * a doc absent from one arm contributes 0 from it and keeps a NULL
-    * rank as the witness. Two bounded frames in, one bounded window.
+  /** Rank-only reciprocal-rank fusion of two arm frames,
+    * (query_id, doc_id, lex_rnk) and (query_id, doc_id, emb_rnk): a doc
+    * absent from one arm contributes 0 from it and keeps a NULL rank as
+    * the witness. Each arm must hold a (query_id, doc_id) at most once
+    * (both arms rank by `row_number` per query over distinct docs).
+    *
+    * The arms are unioned with the other arm's rank as NULL and
+    * range-partitioned on query_id ONCE: that partitioning satisfies the
+    * per-doc `max` of each rank, the per-query window and the final
+    * (query_id, rnk) order, so the fusion has one exchange (plus the
+    * range bounds' sampling job over the arms).
     */
-  private def fuseRrf(lexArm: DataFrame, embArm: DataFrame,
-                      k: Int, rrfK: Int): DataFrame = {
-    val fused = lexArm.join(embArm, Seq("query_id", "doc_id"), "full_outer")
+  private[ext] def fuseRrf(lexArm: DataFrame, embArm: DataFrame,
+                           k: Int, rrfK: Int): DataFrame = {
+    val noRank = lit(null).cast("int")
+    val fused = lexArm
+      .select(col("query_id"), col("doc_id"), col("lex_rnk"),
+        noRank.as("emb_rnk"))
+      .unionByName(embArm.select(col("query_id"), col("doc_id"),
+        noRank.as("lex_rnk"), col("emb_rnk")))
+      .repartitionByRange(col("query_id"))
+      .groupBy("query_id", "doc_id")
+      .agg(max(col("lex_rnk")).as("lex_rnk"), max(col("emb_rnk")).as("emb_rnk"))
       .withColumn("rrf_score", round(
         coalesce(lit(1.0) / (lit(rrfK) + col("lex_rnk")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(rrfK) + col("emb_rnk")), lit(0.0)), 6))

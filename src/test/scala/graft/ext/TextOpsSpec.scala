@@ -488,6 +488,106 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     assert(left.isEmpty, s"threads outlived the call: $left")
   }
 
+  test("store hybrid's IVF arm never returns a neighbor twice for one " +
+    "query, after an append and after a compaction") {
+    import org.apache.spark.sql.functions.col
+    // fuseRrf's union form assumes each arm holds a (query_id, doc_id)
+    // at most once; the lexical arm is unique by construction
+    val (_, emb) = storeCorpus()
+    val annDir = tmpStore("graft_ivf_unique")
+    Similarity.ivfIndexStoreInit(emb.filter(col("vec_id") % 2 === 0), annDir)
+    Similarity.ivfIndexStoreAppend(spark,
+      emb.filter(col("vec_id") % 2 === 1), annDir)
+    val qv = emb.filter(col("vec_id") < 10)
+    def dupes(): Seq[(Long, Long)] =
+      Similarity.ivfStoreProbeUnsorted(spark, qv, annDir, k = 60, nProbe = 16,
+        keep = None).select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .groupBy(identity).collect { case (p, g) if g.size > 1 => p }.toSeq
+    assert(dupes().isEmpty, "after append")
+    Similarity.ivfIndexStoreCompact(spark, annDir)
+    assert(dupes().isEmpty, "after compaction")
+  }
+
+  test("store hybrid plan shape: the lexical arm caches nothing, the " +
+    "fusion has one exchange, and the call's job count is bounded") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_shape_lex"), tmpStore("graft_shape_ann"))
+    TextOps.bm25IndexInit(d, lexDir)
+    Similarity.ivfIndexStoreInit(emb, annDir)
+    val (qd, qv) = (d.filter(col("doc_id") < 10), emb.filter(col("vec_id") < 10))
+    val sc = spark.sparkContext
+    val (group, markerGroup) = ("textops-plan-shape", "textops-plan-shape-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `markerGroup` => markerJob.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkPlan]()
+    val planner = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    def inGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }
+    // suites run one at a time: from an empty cache, any entry found
+    // after the call is the call's
+    spark.catalog.clearCache()
+    sc.addSparkListener(counter)
+    spark.listenerManager.register(planner)
+    val fused = try {
+      val f = inGroup(group) {
+        val f = TextOps.hybridRrfStoreTopDocs(qd, qv, lexDir, annDir)
+        assert(f.collect().length === 50)
+        f
+      }
+      // a marker job after the call: once its end is delivered, so is
+      // every earlier event on the same listener queue
+      inGroup(markerGroup)(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      f
+    } finally {
+      spark.listenerManager.unregister(planner)
+      sc.removeSparkListener(counter)
+    }
+    object Aqe extends AdaptiveSparkPlanHelper
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the call left a cache entry behind")
+    assert(!plans.asScala.exists(p =>
+      Aqe.collectWithSubqueries(p) { case s: InMemoryTableScanLike => s }.nonEmpty),
+      "a plan run by the call read a cached relation")
+    val exchanges = Aqe.collect(fused.queryExecution.executedPlan) {
+      case s: ShuffleExchangeExec => s
+    }
+    assert(exchanges.size === 1, fused.queryExecution.executedPlan.toString)
+    // 18 jobs; the form before (a cached query-token frame, a bucket
+    // distinct-collect, a full-outer-join fusion with four exchanges)
+    // ran 25 for this call
+    assert(jobs.get <= 18, s"${jobs.get} jobs")
+  }
+
   test("declared sidecar schemas match what the store writers write") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.StructType

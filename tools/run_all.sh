@@ -3,6 +3,11 @@
 # capstone ETL. Usage: tools/run_all.sh
 set -e
 cd /root/repo
+# sbt resolves offline, as in the tier-1 test line
+export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+# one core per host CPU, half the host's RAM for the heap (2-8 GB)
+CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)
 echo "== compile"; sbt -batch compile | tail -1
 echo "== test"; sbt -batch test 2>&1 | grep -E 'Tests:' | tail -1
 echo "== verify sf0.01"
@@ -16,6 +21,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   AO="$AO --add-opens java.base/$p=ALL-UNNAMED"
 done
 echo "== bench sf0.1"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 java $AO -Xmx8g -cp "$CP" graft.Bench 2>/dev/null | tail -1
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS java $AO -Xmx$HEAP -cp "$CP" graft.Bench 2>/dev/null | tail -1
 echo "== capstone ETL"
 rm -rf /tmp/graft_capstone && java $AO -Xmx8g -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1

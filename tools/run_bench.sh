@@ -12,6 +12,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_ONLY="$ONLY" \
-exec java $ADD_OPENS -Xmx16g \
+# one core per host CPU and half the host's RAM for the heap (2-8 GB),
+# as the tier-1 test line sizes SPARK_DRIVER_MEM
+CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_ONLY="$ONLY" \
+exec java $ADD_OPENS -Xmx$HEAP \
   -cp "$CP" graft.Bench
