@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** `local[cpus]` with as many shuffle partitions; graft's Catalyst
-    * additions injected through `GraftExtensions` at build time (the only
-    * path that can register the columnar rule); UTC session time; no UI;
+    * additions — every SQL function, strategy and rule — injected through
+    * `GraftExtensions` at build time (the only path that registers
+    * them); UTC session time; no UI;
     * and parquet TIMESTAMP(NANOS) read as long (events.parquet carries
     * them; `Tables.events` converts them back to µs timestamps).
     */

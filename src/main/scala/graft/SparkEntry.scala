@@ -129,7 +129,7 @@ object SparkEntry {
     "q_hll_distinct" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, count, lit}
       Tables.lineitem(s, d).groupBy("l_returnflag").agg(
-        graft.functions.HllSketch.hll_distinct(s, col("l_partkey")).as("approx_parts"),
+        graft.functions.HllSketch.hll_distinct(col("l_partkey")).as("approx_parts"),
         count(lit(1)).as("n_rows"))
         .orderBy("l_returnflag")
     }),
@@ -578,10 +578,10 @@ object SparkEntry {
       val K = graft.functions.KmvSketch
       val daily = Tables.events(s, d)
         .groupBy(to_date(col("ts")).as("day"))
-        .agg(K.kmv_sketch_buffer(s, col("user_id"), 64).as("sketch"))
+        .agg(K.kmv_sketch_buffer(col("user_id"), 64).as("sketch"))
       daily.groupBy(date_trunc("week", col("day")).cast("date").as("wk"))
-        .agg(K.kmv_merge_estimate(s, col("sketch")).as("est_users"),
-          K.kmv_merge_sample(s, col("sketch")).as("sample"))
+        .agg(K.kmv_merge_estimate(col("sketch")).as("est_users"),
+          K.kmv_merge_sample(col("sketch")).as("sample"))
         .select(date_format(col("wk"), "yyyy-MM-dd").as("week_start"),
           col("est_users"), size(col("sample")).as("n_sample"),
           array_min(col("sample")).as("sample_min"),

@@ -654,7 +654,7 @@ object StressBench {
       time("ivf_store_probe_reseeded", ext.Similarity.ivfIndexStoreProbe(spark,
         emb.filter(col("vec_id") < 10), ivfSkewDir).count()),
       time("hll_distinct", {
-        li.agg(functions.HllSketch.hll_distinct(spark, col("l_partkey"))).collect()(0).getLong(0)
+        li.agg(functions.HllSketch.hll_distinct(col("l_partkey"))).collect()(0).getLong(0)
       }),
       // round-5 additions: the new curation/signal operators at scale
       time("gopher_rules", ext.TextOps.gopherRules(docs).count()),
@@ -725,7 +725,7 @@ object StressBench {
       // ~200k distinct at x10). The exact form shuffles the full key
       // domain; MG ships <= 64 counters per map partition.
       time("highcard_mg", li
-        .agg(functions.FreqSketch.mg_topk(spark, col("l_partkey").cast("string"), 64))
+        .agg(functions.FreqSketch.mg_topk(col("l_partkey").cast("string"), 64))
         .count()),
       time("highcard_exact_top64", li
         .groupBy(col("l_partkey").cast("string").as("k"))

@@ -843,10 +843,7 @@ object Curation {
                        path: String): String = {
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-staging")
-    val old = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-old")
+    val (staging, old) = Similarity.swapSiblings(target)
     def stagingComplete =
       fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
     if (fs.exists(target)) {
@@ -881,10 +878,10 @@ object Curation {
 
   /** Staged, crash-recoverable rewrite of one parquet store dir —
     * shared by the media, text, and embedding compactions. Reads the
-    * live store, applies `compact`, writes the result to a staging
-    * sibling, then swaps with rename-ASIDE (live → .compact-old,
-    * staging → live, delete .compact-old): a crash at any point
-    * leaves the store recoverable ([[storeSwapRecover]], invoked
+    * live store, applies `compact`, and writes the result through
+    * [[Similarity.stageThenSwap]]'s rename-ASIDE swap (live →
+    * .compact-old, staging → live, delete .compact-old): a crash at
+    * any point leaves the store recoverable ([[storeSwapRecover]], invoked
     * automatically on entry, restores a live target from the aside or
     * staging copy — a delete-then-rename window would instead leave
     * NO copy outside a hidden staging dir). Returns
@@ -893,30 +890,15 @@ object Curation {
   private[ext] def compactRewrite(spark: org.apache.spark.sql.SparkSession,
                                   path: String,
                                   compact: DataFrame => DataFrame): (Long, Long) = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (storeSwapRecover(spark, path) == "absent")
-      throw new java.io.IOException(s"no store (live, old, or staged) at $target")
-    val cur = spark.read.parquet(target.toString)
+      throw new java.io.IOException(s"no store (live, old, or staged) at $path")
+    val cur = spark.read.parquet(path)
     val before = cur.count()
     // localCheckpoint cuts the lineage off the files about to be
     // replaced — the staged write must not re-scan the target dir
     val out = compact(cur).localCheckpoint(true)
     val after = out.count()
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-staging")
-    fs.delete(staging, true)
-    out.write.mode("overwrite").parquet(staging.toString)
-    val old = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-old")
-    fs.delete(old, true)
-    if (!fs.rename(target, old))
-      throw new java.io.IOException(s"rename $target -> $old failed")
-    if (!fs.rename(staging, target)) {
-      fs.rename(old, target) // restore the live store before failing
-      throw new java.io.IOException(s"rename $staging -> $target failed")
-    }
-    fs.delete(old, true)
+    Similarity.stageThenSwap(spark, path)(out.write.mode("overwrite").parquet(_))
     (before, after)
   }
 

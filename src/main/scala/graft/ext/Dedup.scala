@@ -133,7 +133,7 @@ object Dedup {
     */
   def minhashSignatures(sh: DataFrame, numHashes: Int = 64): DataFrame = {
     val sig = graft.functions.MinHashSketch
-      .minhash_sketch(sh.sparkSession, col("shingle"), numHashes)
+      .minhash_sketch(col("shingle"), numHashes)
     sh.groupBy("doc_id").agg(sig.as("sig"))
   }
 
@@ -170,7 +170,7 @@ object Dedup {
     */
   def minhashSignaturesMd5(sh: DataFrame, numHashes: Int = 16): DataFrame = {
     val sig = graft.functions.Md5MinHashSketch
-      .md5_minhash_sketch(sh.sparkSession, col("shingle"), numHashes)
+      .md5_minhash_sketch(col("shingle"), numHashes)
     sh.groupBy("doc_id").agg(sig.as("sig"))
   }
 
@@ -548,7 +548,7 @@ object Dedup {
     val tok = documents.select(col("doc_id"),
       explode(split(col("text"), " ")).as("token"))
     tok.groupBy("doc_id").agg(graft.functions.SimHashSketch
-      .simhash_sketch(documents.sparkSession, col("token")).as("simhash"))
+      .simhash_sketch(col("token")).as("simhash"))
   }
 
   /** Composed-builtins twin of [[simhash]]: 64 conditional-sum

@@ -36,13 +36,9 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Hot-path cosine: graft's native codegen expression (fused
-    * dot/norms single pass, no intermediate arrays). Registers the
-    * function on the dataframe's session idempotently.
+    * dot/norms single pass, no intermediate arrays).
     */
-  def nativeCosine(df: DataFrame, a: Column, b: Column): Column = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    call_function("cosine_sim", a, b)
-  }
+  def nativeCosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
@@ -57,7 +53,7 @@ object Similarity {
     val c = embeddings
       .select(col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("cv"))
     val sims = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", nativeCosine(embeddings, col("qv"), col("cv")))
+      .withColumn("sim", nativeCosine(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     sims.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -76,7 +72,7 @@ object Similarity {
     val a = embeddings.select(col("vec_id").as("vec_a"), asDouble(col("embedding")).as("va"))
     val b = embeddings.select(col("vec_id").as("vec_b"), asDouble(col("embedding")).as("vb"))
     a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("sim", nativeCosine(embeddings, col("va"), col("vb")))
+      .withColumn("sim", nativeCosine(col("va"), col("vb")))
       .filter(col("sim") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("sim"), 6).as("cosine_sim"))
       .orderBy("vec_a", "vec_b")
@@ -102,7 +98,7 @@ object Similarity {
           s => s.getField("c")).as("centroid"))
     embeddings.join(broadcast(cen), "label")
       .withColumn("centroid_sim",
-        round(nativeCosine(embeddings, asDouble(col("embedding")), col("centroid")), 5))
+        round(nativeCosine(asDouble(col("embedding")), col("centroid")), 5))
       .select(col("vec_id"), col("label"), col("centroid_sim"),
         (col("centroid_sim") < threshold).as("is_outlier"))
       .orderBy("vec_id")
@@ -201,10 +197,10 @@ object Similarity {
     * instead of nList inlined copies — generated-code size, and with it
     * Janino compile time, stays constant as nList grows.
     */
-  private def centroidScores(df: DataFrame, centroids: Array[Array[Double]]): Column = {
+  private def centroidScores(centroids: Array[Array[Double]]): Column = {
     val emb = asDouble(col("embedding"))
     transform(typedlit(centroids.map(_.toSeq).toSeq),
-      (c, i) => struct(nativeCosine(df, emb, c).as("sim"), i.cast("int").as("idx")))
+      (c, i) => struct(nativeCosine(emb, c).as("sim"), i.cast("int").as("idx")))
   }
 
   /** Nearest-centroid assignment (max cosine): struct array_max gives
@@ -212,7 +208,7 @@ object Similarity {
     */
   def assignClusters(embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     embeddings.withColumn("cluster",
-      array_max(centroidScores(embeddings, centroids)).getField("idx"))
+      array_max(centroidScores(centroids)).getField("idx"))
 
   /** IVF approximate top-k: queries probe their `nProbe` nearest
     * centroid lists; candidates are only the vectors assigned to those
@@ -229,14 +225,14 @@ object Similarity {
     // each query's nProbe nearest centroid ids, exploded to (query, cluster)
     val q = assigned.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), emb.as("qv"),
-        slice(reverse(array_sort(centroidScores(embeddings, centroids))), 1, nProbe)
+        slice(reverse(array_sort(centroidScores(centroids))), 1, nProbe)
           .as("probes"))
       .select(col("query_id"), col("qv"),
         explode(col("probes").getField("idx")).as("cluster"))
     val c = assigned.select(col("vec_id").as("neighbor_id"), emb.as("cv"), col("cluster"))
     val sims = c.join(broadcast(q), Seq("cluster"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", nativeCosine(embeddings, col("qv"), col("cv")))
+      .withColumn("sim", nativeCosine(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     val result = sims.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -263,7 +259,7 @@ object Similarity {
         col("bucket"))
     val sims = c.join(broadcast(q), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", nativeCosine(embeddings, col("qv"), col("cv")))
+      .withColumn("sim", nativeCosine(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     val result = sims.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -330,7 +326,7 @@ object Similarity {
     val b = assigned.select(col("cluster"), col("vec_id").as("vec_b"), col("e").as("eb"))
     val dropped = a.join(b, Seq("cluster"))
       .filter(col("vec_a") < col("vec_b"))
-      .filter(nativeCosine(embeddings, col("ea"), col("eb")) >= threshold)
+      .filter(nativeCosine(col("ea"), col("eb")) >= threshold)
       .select(col("vec_b").as("vec_id")).distinct()
     val result = assigned
       .join(dropped.withColumn("is_dropped", lit(true)), Seq("vec_id"), "left")
@@ -396,7 +392,6 @@ object Similarity {
     */
   def quantizedCosineTopK(embeddings: DataFrame, numQueries: Int = 10,
                           k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
     // native codegen loops for BOTH hot paths. The composed twins
@@ -437,7 +432,6 @@ object Similarity {
     * concat_ws + md5 chain (codegen'd built-ins).
     */
   def quantizedCodes(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
     embeddings
@@ -452,7 +446,6 @@ object Similarity {
     * chain they'd otherwise pay for nothing.
     */
   private def quantizedQv(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
     embeddings
@@ -469,7 +462,6 @@ object Similarity {
     * every DuckDB oracle — is unchanged.
     */
   def quantizedByteCodes(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDotBytes.int_dot_bytes
     embeddings
@@ -495,7 +487,6 @@ object Similarity {
     */
   def storedCodesTopK(codes: DataFrame, numQueries: Int = 10,
                       k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     import graft.functions.IntDot.int_dot
     import graft.functions.IntDotBytes.int_dot_bytes
     val packed = codes.columns.contains("qb")
@@ -1117,7 +1108,6 @@ object Similarity {
     * fully hash-matched (`q_ivf_index_assign_inc`).
     */
   def ivfIndexAssign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDot.int_dot
@@ -1393,7 +1383,6 @@ object Similarity {
     */
   private[ext] def collectAssignmentStats(
       rows: DataFrame): Map[(Int, Int), (Long, Long)] = {
-    graft.functions.GraftFunctions.register(rows.sparkSession)
     import graft.functions.Int8Unpack.int8_unpack
     rows
       .select(col("centroid_id").as("cluster"),
@@ -1607,7 +1596,6 @@ object Similarity {
     */
   def ivfIndexStoreFsck(spark: org.apache.spark.sql.SparkSession,
                         dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Unpack.int8_unpack
     // reader-side self-heal first, like every sidecar read path
     val sidecarPath = new org.apache.hadoop.fs.Path(s"$dir/lloyd_stats")
@@ -1765,6 +1753,16 @@ object Similarity {
     fs.delete(staging, true)
   }
 
+  /** The two siblings of a store root `T` that a whole-store swap goes
+    * through: the staged new store `.T.compact-staging` and the
+    * rename-aside old one `.T.compact-old`. [[stageThenSwap]] and
+    * [[graft.ext.Curation.storeSwapRecover]] both name them here.
+    */
+  private[ext] def swapSiblings(target: org.apache.hadoop.fs.Path)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) =
+    (new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.compact-staging"),
+      new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.compact-old"))
+
   /** ONE copy of the whole-store staged swap every compact/train uses
     * (extracted round-17 — it encodes the exact names and rename order
     * [[graft.ext.Curation.storeSwapRecover]]'s enumerated crash states
@@ -1792,10 +1790,7 @@ object Similarity {
                                  dir: String)(stage: String => Unit): Unit = {
     val target = new org.apache.hadoop.fs.Path(dir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-staging")
-    val old = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.compact-old")
+    val (staging, old) = swapSiblings(target)
     fs.delete(staging, true)
     stage(staging.toString)
     fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")).close()
@@ -1875,7 +1870,6 @@ object Similarity {
     // sidecar read FIRST (fail-loud on a pre-sidecar layout before any
     // write, the append discipline) — also adopts a staged .next
     val statsBefore = ivfIndexStoreLloydStats(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Unpack.int8_unpack
     val idFrame = ids.select(col("vec_id")).distinct().persist()
     try {
@@ -1977,7 +1971,6 @@ object Similarity {
                                   candidatesOf: Seq[Int] => DataFrame): DataFrame = {
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDotBytes.int_dot_bytes
-    graft.functions.GraftFunctions.register(spark)
     val scored = seedScoreArray(collectSeedCentroids(
       spark.read.schema(CENTROID_PROBE_SCHEMA).parquet(liveCentroids(spark, dir))))
     // the probe ranks centroids off the int codes (qv — the scored
@@ -2068,7 +2061,6 @@ object Similarity {
     import graft.functions.IntDotBytes.int_dot_bytes
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
-    graft.functions.GraftFunctions.register(spark)
     val scored = seedScoreArray(
       collectSeedCentroids(ivfIndexStoreCentroids(spark, dir)))
     val q0 = queryVecs
@@ -2927,7 +2919,6 @@ object Similarity {
   def ivfIndexStoreTrain(spark: org.apache.spark.sql.SparkSession,
                          dir: String, nList: Int = 16,
                          iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Unpack.int8_unpack
     import graft.functions.PqCodes.pq_encode
     if (Curation.storeSwapRecover(spark, dir) == "absent")
@@ -3103,7 +3094,6 @@ object Similarity {
     */
   def pqCodesFrame(embeddings: DataFrame, matrix: Array[Int],
                    nSub: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.PqCodes.pq_encode
     quantizedQv(embeddings).filter(col("qsq") > 0)
       .select(col("vec_id"), pq_encode(col("qv"), matrix, nSub).as("pq"))
@@ -3119,7 +3109,6 @@ object Similarity {
   def pqStoredTopK(pqCodes: DataFrame, queryVecs: DataFrame,
                    matrix: Array[Int], nSub: Int = 8,
                    numQueries: Int = 10, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(pqCodes.sparkSession)
     import graft.functions.PqCodes.{pq_lut, pq_adc}
     val q = quantizedQv(queryVecs).filter(col("qsq") > 0)
       .filter(col("vec_id") < numQueries)
@@ -3155,7 +3144,6 @@ object Similarity {
     */
   def pqEncodeSummary(embeddings: DataFrame, nBook: Int = 16,
                       nSub: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.PqCodes.pq_encode
     import graft.functions.Uint8Unpack.uint8_unpack
     val codes = quantizedQv(embeddings).filter(col("qsq") > 0)
@@ -3208,7 +3196,6 @@ object Similarity {
   private def pqTopKWithMatrix(codes: DataFrame, matrix: Array[Int],
                                numQueries: Int, k: Int,
                                nSub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     import graft.functions.PqCodes.{pq_encode, pq_lut, pq_adc}
     val corpus = codes
       .select(col("vec_id").as("neighbor_id"),
@@ -3341,7 +3328,6 @@ object Similarity {
     */
   private[ext] def pqLloydCodebook(codes: DataFrame, matrix: Array[Int],
                                    nBook: Int, nSub: Int): Array[Int] = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     import graft.functions.PqCodes.pq_encode
     import graft.functions.Uint8Unpack.uint8_unpack
     val dim = matrix.length / nBook
@@ -3395,7 +3381,6 @@ object Similarity {
     */
   def pqTrainDistortion(embeddings: DataFrame, nBook: Int = 16,
                         nSub: Int = 8, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.PqCodes.pq_encode
     val codes = quantizedQv(embeddings).filter(col("qsq") > 0).persist()
     val mats = pqLloydEpochs(codes, nBook, nSub, iters)
@@ -3495,7 +3480,6 @@ object Similarity {
     */
   private def ivfPqAdcSims(codes: DataFrame, numQueries: Int, nList: Int,
                            nProbe: Int, nBook: Int, nSub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     import graft.functions.PqCodes.{pq_encode, pq_lut, pq_adc}
     val seeds = seedPickFromCodes(codes, nList)
     val scored = seedScoreArray(seeds.map { case (cid, _, cv, csq) => (cid, cv, csq) })
@@ -3576,7 +3560,6 @@ object Similarity {
                            nSub: Int = 8,
                            layout: Seq[Int] = Nil,
                            residual: Boolean = false): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Unpack.int8_unpack
     import graft.functions.PqCodes.{pq_encode, pq_recon, int_vec_add,
       int_vec_sub}
@@ -3674,7 +3657,6 @@ object Similarity {
     */
   def ivfIndexStorePqAppend(spark: org.apache.spark.sql.SparkSession,
                             assigned: DataFrame, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.PqCodes.{pq_encode, pq_recon, int_vec_add,
       int_vec_sub}
     import graft.functions.IntDot.int_dot
@@ -3724,7 +3706,6 @@ object Similarity {
   def ivfIndexStorePqProbe(spark: org.apache.spark.sql.SparkSession,
                            queryVecs: DataFrame, dir: String,
                            k: Int = 5, nProbe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
     import graft.functions.PqCodes.{pq_lut, pq_adc}
@@ -3807,7 +3788,6 @@ object Similarity {
   def ivfIndexStorePrefixBuild(spark: org.apache.spark.sql.SparkSession,
                                dir: String,
                                dims: Seq[Int] = Seq(16, 32, 64)): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     require(dims.nonEmpty && dims == dims.distinct,
       s"prefix widths must be distinct and nonempty, got $dims")
     val rows = ivfIndexStoreLiveAssignments(spark, dir)
@@ -3916,7 +3896,6 @@ object Similarity {
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDot.int_dot
     import graft.functions.IntDotBytes.int_dot_bytes
-    graft.functions.GraftFunctions.register(spark)
     val scored = seedScoreArray(
       collectSeedCentroids(ivfIndexStoreCentroids(spark, dir)))
     val q0 = queryVecs
@@ -4132,7 +4111,6 @@ object Similarity {
                              cents: Array[(Int, Seq[Int], Long)],
                              numQueries: Int, nProbe: Int, nBook: Int,
                              nSub: Int, pqIters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(codes.sparkSession)
     import graft.functions.PqCodes.{pq_encode, pq_lut, pq_adc, pq_recon,
       int_vec_add, int_vec_sub}
     import graft.functions.IntDot.int_dot
@@ -4389,7 +4367,6 @@ object Similarity {
                     nList: Int = 16, nBook: Int = 16, nSub: Int = 8,
                     probeGrid: Seq[Int] = Seq(1, 2, 4, 8),
                     rerankGrid: Seq[Int] = Seq(5, 10, 20)): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import graft.functions.PqCodes.{pq_encode, pq_lut, pq_adc}
     import graft.functions.IntDot.int_dot
     val codes = quantizedQv(embeddings).filter(col("qsq") > 0).persist()

@@ -1740,7 +1740,6 @@ object TextOps {
     * reports before/after char counts as the audit signal.
     */
   def normalizeText(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val withRaw = withSyntheticUnicode(documents)
     val nfc = graft.functions.UnicodeNormalize.unicode_normalize(col("raw"))
     val stripped = regexp_replace(nfc,

@@ -163,8 +163,8 @@ object CentroidScores {
       matrix.toIndexedSeq, csqs.toIndexedSeq, cids.toIndexedSeq)
   }
 
-  /** Column-API form (requires [[GraftFunctions.register]] or
-    * [[GraftExtensions]] on the session). `matrix` is the flat packed
+  /** Column-API form (requires [[GraftExtensions]] on the session, as
+    * [[graft.GraftSession]] builds it). `matrix` is the flat packed
     * nList × dim int8 centroid matrix in centroid order.
     */
   def centroid_scores(qv: Column, qsq: Column, matrix: Array[Byte],

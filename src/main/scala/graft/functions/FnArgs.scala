@@ -15,48 +15,6 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, NumericType,
   */
 private[functions] object FnArgs {
 
-  /** Idempotent-QUIET temp-function registration: operators register at
-    * every use site, and an unconditional replace logs a "replaced a
-    * previously registered function" warning per call after the first —
-    * noise that buries real warnings in long sessions. Registration
-    * records the graft expression class in the `ExpressionInfo`, and a
-    * present entry is skipped ONLY when that class check says it is
-    * ours — a user session that registered its own temp function under
-    * one of these names gets REPLACED (with Spark's one replace warning
-    * as the correct signal), so graft operators never silently resolve
-    * a foreign implementation. The residual check-then-register race
-    * between two threads is benign (both install the identical builder).
-    */
-  def registerQuiet(spark: org.apache.spark.sql.SparkSession)(
-      name: String, builder: Seq[Expression] => Expression,
-      owner: Class[_]): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-    // getClassName can be null (e.g. a registration path that derived
-    // it from an anonymous class's getCanonicalName) — a null entry is
-    // foreign by definition, never a crash
-    val existing = reg.lookupFunction(ident)
-    val ours = existing
-      .exists(i => Option(i.getClassName).exists(_.startsWith("graft.")))
-    if (!ours) {
-      // name the displaced function explicitly — Spark's generic
-      // "replaced a previously registered function" line doesn't say
-      // WHOSE entry was clobbered, and the takeover is the one session
-      // state change graft operators make as a side effect
-      existing.foreach { i =>
-        org.slf4j.LoggerFactory.getLogger("graft.functions.FnArgs").warn(
-          s"replacing non-graft temp function `$name` " +
-            s"(was ${Option(i.getClassName).getOrElse("<unknown class>")}) " +
-            "with the graft built-in; the previous definition is gone for " +
-            "this session")
-      }
-      reg.registerFunction(ident,
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          owner.getName, name),
-        builder)
-    }
-  }
-
   /** Arity gate; `expected` lists every legal argument count. */
   def arity(fn: String, exprs: Seq[Expression], expected: Seq[Int]): Seq[Expression] = {
     if (!expected.contains(exprs.length))

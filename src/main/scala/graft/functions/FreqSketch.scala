@@ -6,7 +6,7 @@ import java.util.{HashMap => JHashMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -150,30 +150,10 @@ object FreqSketch {
       mergeInto(a._2, a._1, b._2); a
     }
 
-  def register(spark: SparkSession): Unit = {
-    def kOf(fn: String, exprs: Seq[Expression], default: Int): Int =
-      if (exprs.length > 1) FnArgs.intLit(fn, exprs, 1, "k") else default
-    FnArgs.registerQuiet(spark)(
-      "mg_topk", exprs => MgTopK(FnArgs.arity("mg_topk", exprs, Seq(1, 2)).head,
-        kOf("mg_topk", exprs, 64)), classOf[MgTopK])
-    FnArgs.registerQuiet(spark)(
-      "mg_sketch_buffer",
-      exprs => MgSketchBuffer(FnArgs.arity("mg_sketch_buffer", exprs, Seq(1, 2)).head,
-        kOf("mg_sketch_buffer", exprs, 64)), classOf[MgSketchBuffer])
-    FnArgs.registerQuiet(spark)(
-      "mg_merge_topk",
-      exprs => MgMergeTopK(FnArgs.arity("mg_merge_topk", exprs, Seq(1)).head), classOf[MgMergeTopK])
-  }
-
-  def mg_topk(spark: SparkSession, c: Column, k: Int = 64): Column = {
-    register(spark); call_function("mg_topk", c, lit(k))
-  }
-  def mg_sketch_buffer(spark: SparkSession, c: Column, k: Int = 64): Column = {
-    register(spark); call_function("mg_sketch_buffer", c, lit(k))
-  }
-  def mg_merge_topk(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("mg_merge_topk", c)
-  }
+  def mg_topk(c: Column, k: Int = 64): Column = call_function("mg_topk", c, lit(k))
+  def mg_sketch_buffer(c: Column, k: Int = 64): Column =
+    call_function("mg_sketch_buffer", c, lit(k))
+  def mg_merge_topk(c: Column): Column = call_function("mg_merge_topk", c)
 }
 
 /** One-pass frequent items from raw string keys. */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
@@ -106,38 +106,15 @@ object HllSketch {
     math.round(est)
   }
 
-  def register(spark: SparkSession): Unit = {
-    FnArgs.registerQuiet(spark)(
-      "hll_distinct",
-      exprs => HllSketch(FnArgs.arity("hll_distinct", exprs, Seq(1, 2)).head,
-        if (exprs.length > 1) FnArgs.intLit("hll_distinct", exprs, 1, "p") else 14),
-      classOf[HllSketch])
-    FnArgs.registerQuiet(spark)(
-      "hll_sketch_buffer",
-      exprs => HllSketchBuffer(FnArgs.arity("hll_sketch_buffer", exprs, Seq(1, 2)).head,
-        if (exprs.length > 1) FnArgs.intLit("hll_sketch_buffer", exprs, 1, "p") else 14),
-      classOf[HllSketchBuffer])
-    FnArgs.registerQuiet(spark)(
-      "hll_merge",
-      exprs => HllMerge(FnArgs.arity("hll_merge", exprs, Seq(1)).head), classOf[HllMerge])
-  }
-
-  def hll_distinct(spark: SparkSession, c: Column, p: Int = 14): Column = {
-    register(spark)
+  def hll_distinct(c: Column, p: Int = 14): Column =
     call_function("hll_distinct", c, lit(p))
-  }
 
   /** Aggregate raw values into a STORED sketch (binary registers). */
-  def hll_sketch_buffer(spark: SparkSession, c: Column, p: Int = 14): Column = {
-    register(spark)
+  def hll_sketch_buffer(c: Column, p: Int = 14): Column =
     call_function("hll_sketch_buffer", c, lit(p))
-  }
 
   /** Merge stored sketches (register-wise max) → estimate. */
-  def hll_merge(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("hll_merge", c)
-  }
+  def hll_merge(c: Column): Column = call_function("hll_merge", c)
 }
 
 /** [[HllSketch]] variant whose output is the raw register buffer

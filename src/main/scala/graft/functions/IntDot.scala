@@ -77,8 +77,8 @@ object IntDot {
     IntDot(Cast(exprs(0), arrInt), Cast(exprs(1), arrInt))
   }
 
-  /** Column-API form (requires [[GraftFunctions.register]] or
-    * [[GraftExtensions]] on the session).
+  /** Column-API form (requires [[GraftExtensions]] on the session, as
+    * [[graft.GraftSession]] builds it).
     */
   def int_dot(a: Column, b: Column): Column = call_function("int_dot", a, b)
 }

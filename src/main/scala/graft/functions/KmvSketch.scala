@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.{TreeMap => JTreeMap}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -129,38 +129,12 @@ object KmvSketch {
       mergeInto(a._2, a._1, b._2); a
     }
 
-  def register(spark: SparkSession): Unit = {
-    def kOf(fn: String, exprs: Seq[Expression], default: Int): Int =
-      if (exprs.length > 1) FnArgs.intLit(fn, exprs, 1, "k") else default
-    FnArgs.registerQuiet(spark)(
-      "kmv_distinct", exprs => KmvDistinct(FnArgs.arity("kmv_distinct", exprs, Seq(1, 2)).head,
-        kOf("kmv_distinct", exprs, 256)), classOf[KmvDistinct])
-    FnArgs.registerQuiet(spark)(
-      "kmv_sketch_buffer",
-      exprs => KmvSketchBuffer(FnArgs.arity("kmv_sketch_buffer", exprs, Seq(1, 2)).head,
-        kOf("kmv_sketch_buffer", exprs, 256)), classOf[KmvSketchBuffer])
-    FnArgs.registerQuiet(spark)(
-      "kmv_merge_estimate",
-      exprs => KmvMergeEstimate(FnArgs.arity("kmv_merge_estimate", exprs, Seq(1)).head),
-      classOf[KmvMergeEstimate])
-    FnArgs.registerQuiet(spark)(
-      "kmv_merge_sample",
-      exprs => KmvMergeSample(FnArgs.arity("kmv_merge_sample", exprs, Seq(1)).head),
-      classOf[KmvMergeSample])
-  }
-
-  def kmv_distinct(spark: SparkSession, c: Column, k: Int = 256): Column = {
-    register(spark); call_function("kmv_distinct", c, lit(k))
-  }
-  def kmv_sketch_buffer(spark: SparkSession, c: Column, k: Int = 256): Column = {
-    register(spark); call_function("kmv_sketch_buffer", c, lit(k))
-  }
-  def kmv_merge_estimate(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("kmv_merge_estimate", c)
-  }
-  def kmv_merge_sample(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("kmv_merge_sample", c)
-  }
+  def kmv_distinct(c: Column, k: Int = 256): Column =
+    call_function("kmv_distinct", c, lit(k))
+  def kmv_sketch_buffer(c: Column, k: Int = 256): Column =
+    call_function("kmv_sketch_buffer", c, lit(k))
+  def kmv_merge_estimate(c: Column): Column = call_function("kmv_merge_estimate", c)
+  def kmv_merge_sample(c: Column): Column = call_function("kmv_merge_sample", c)
 }
 
 /** One-pass distinct estimate from raw keys. */

@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -111,17 +111,7 @@ case class Md5MinHashSketch(child: Expression, numHashes: Int,
 }
 
 object Md5MinHashSketch {
-  /** Register + Column form: `md5_minhash_sketch(shingleCol, numHashes)`. */
-  def register(spark: SparkSession): Unit =
-    FnArgs.registerQuiet(spark)(
-      "md5_minhash_sketch",
-      exprs => Md5MinHashSketch(
-        FnArgs.arity("md5_minhash_sketch", exprs, Seq(2)).head,
-        FnArgs.intLit("md5_minhash_sketch", exprs, 1, "numHashes")),
-      classOf[Md5MinHashSketch])
-
-  def md5_minhash_sketch(spark: SparkSession, shingle: Column, numHashes: Int): Column = {
-    register(spark)
+  /** Column form of `md5_minhash_sketch(shingleCol, numHashes)`. */
+  def md5_minhash_sketch(shingle: Column, numHashes: Int): Column =
     call_function("md5_minhash_sketch", shingle, lit(numHashes))
-  }
 }

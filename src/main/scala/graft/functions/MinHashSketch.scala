@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
@@ -83,17 +83,7 @@ case class MinHashSketch(child: Expression, numHashes: Int,
 }
 
 object MinHashSketch {
-  /** Register + Column form: `minhash_sketch(shingleCol, numHashes)`. */
-  def register(spark: SparkSession): Unit =
-    FnArgs.registerQuiet(spark)(
-      "minhash_sketch",
-      exprs => MinHashSketch(
-        FnArgs.arity("minhash_sketch", exprs, Seq(2)).head,
-        FnArgs.intLit("minhash_sketch", exprs, 1, "numHashes")),
-      classOf[MinHashSketch])
-
-  def minhash_sketch(spark: SparkSession, shingle: Column, numHashes: Int): Column = {
-    register(spark)
+  /** Column form of `minhash_sketch(shingleCol, numHashes)`. */
+  def minhash_sketch(shingle: Column, numHashes: Int): Column =
     call_function("minhash_sketch", shingle, lit(numHashes))
-  }
 }

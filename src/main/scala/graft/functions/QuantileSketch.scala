@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.{TreeMap => JTreeMap}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -171,37 +171,12 @@ object QuantileSketch {
     if (v == null) b else mergeInto(b, deserializeBuf(v.asInstanceOf[Array[Byte]]))
   }
 
-  def register(spark: SparkSession): Unit = {
-    FnArgs.registerQuiet(spark)(
-      "qsk_quantile",
-      exprs => QskQuantile(FnArgs.arity("qsk_quantile", exprs, Seq(3)).head,
-        FnArgs.intLit("qsk_quantile", exprs, 1, "k"),
-        FnArgs.doubleLit("qsk_quantile", exprs, 2, "p")), classOf[QskQuantile])
-    FnArgs.registerQuiet(spark)(
-      "qsk_buffer", exprs => QskBuffer(FnArgs.arity("qsk_buffer", exprs, Seq(2)).head,
-        FnArgs.intLit("qsk_buffer", exprs, 1, "k")), classOf[QskBuffer])
-    FnArgs.registerQuiet(spark)(
-      "qsk_merge_quantile",
-      exprs => QskMergeQuantile(FnArgs.arity("qsk_merge_quantile", exprs, Seq(2)).head,
-        FnArgs.doubleLit("qsk_merge_quantile", exprs, 1, "p")), classOf[QskMergeQuantile])
-    FnArgs.registerQuiet(spark)(
-      "qsk_merge_total",
-      exprs => QskMergeTotal(FnArgs.arity("qsk_merge_total", exprs, Seq(1)).head),
-      classOf[QskMergeTotal])
-  }
-
-  def qsk_quantile(spark: SparkSession, c: Column, k: Int, p: Double): Column = {
-    register(spark); call_function("qsk_quantile", c, lit(k), lit(p))
-  }
-  def qsk_buffer(spark: SparkSession, c: Column, k: Int): Column = {
-    register(spark); call_function("qsk_buffer", c, lit(k))
-  }
-  def qsk_merge_quantile(spark: SparkSession, c: Column, p: Double): Column = {
-    register(spark); call_function("qsk_merge_quantile", c, lit(p))
-  }
-  def qsk_merge_total(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("qsk_merge_total", c)
-  }
+  def qsk_quantile(c: Column, k: Int, p: Double): Column =
+    call_function("qsk_quantile", c, lit(k), lit(p))
+  def qsk_buffer(c: Column, k: Int): Column = call_function("qsk_buffer", c, lit(k))
+  def qsk_merge_quantile(c: Column, p: Double): Column =
+    call_function("qsk_merge_quantile", c, lit(p))
+  def qsk_merge_total(c: Column): Column = call_function("qsk_merge_total", c)
 }
 
 /** One-pass discrete quantile from raw values. */

@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
@@ -78,14 +78,7 @@ case class SimHashSketch(child: Expression,
 }
 
 object SimHashSketch {
-  def register(spark: SparkSession): Unit =
-    FnArgs.registerQuiet(spark)(
-      "simhash_sketch",
-      exprs => SimHashSketch(FnArgs.arity("simhash_sketch", exprs, Seq(1)).head),
-      classOf[SimHashSketch])
-
-  def simhash_sketch(spark: SparkSession, token: Column): Column = {
-    register(spark)
+  /** Column form of `simhash_sketch(tokenCol)`. */
+  def simhash_sketch(token: Column): Column =
     call_function("simhash_sketch", token)
-  }
 }

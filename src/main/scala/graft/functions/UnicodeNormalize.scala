@@ -61,6 +61,6 @@ object UnicodeNormalize {
   def builder(exprs: Seq[Expression]): Expression =
     UnicodeNormalize(FnArgs.arity("unicode_normalize", exprs, Seq(1)).head)
 
-  /** Column form (requires [[GraftExtensions]] / `register`). */
+  /** Column form (requires [[GraftExtensions]] on the session). */
   def unicode_normalize(c: Column): Column = call_function("unicode_normalize", c)
 }

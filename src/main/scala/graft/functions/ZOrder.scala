@@ -63,6 +63,6 @@ object ZOrder {
       org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType))
   }
 
-  /** Column form (requires [[GraftExtensions]] / [[GraftFunctions]]). */
+  /** Column form (requires [[GraftExtensions]] on the session). */
   def zorder(a: Column, b: Column): Column = call_function("zorder", a, b)
 }

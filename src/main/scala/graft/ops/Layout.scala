@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, ZOrder}
+import graft.functions.ZOrder
 
 /** Data-layout optimization: cluster a table on the Morton curve of two
   * key columns ([[graft.functions.ZOrder]]) and measure what that buys.
@@ -31,12 +31,6 @@ import graft.functions.{GraftFunctions, ZOrder}
   */
 object Layout {
 
-  /** Morton code of two integer columns (casts applied; 31-bit domain). */
-  def zorderCol(df: DataFrame, x: Column, y: Column): Column = {
-    GraftFunctions.register(df.sparkSession)
-    ZOrder.zorder(x, y)
-  }
-
   /** Per-simulated-file bounding boxes after z-order clustering of
     * `orders` on (custkey, order day): file id, row count, and min/max
     * of both dimensions plus the z range. Tight boxes = skippable
@@ -44,7 +38,7 @@ object Layout {
     */
   def zorderFileStats(orders: DataFrame, rowsPerFile: Int = 1000): DataFrame = {
     val day = datediff(col("o_orderdate").cast("date"), to_date(lit("1992-01-01")))
-    val z = zorderCol(orders, col("o_custkey"), day)
+    val z = ZOrder.zorder(col("o_custkey"), day)
     // two-pass range-partitioned global ordinal (GlobalOrder) instead
     // of a partition-less row_number window: same 0-based rank, no
     // single-reducer sort, no WindowExec WARN — the stats report now

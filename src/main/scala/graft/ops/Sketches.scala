@@ -24,10 +24,9 @@ object Sketches {
     * shuffle on day; the buffer (2^p bytes) is the only per-group state.
     */
   def dailyUserSketches(events: DataFrame, p: Int = 14): DataFrame = {
-    val s = events.sparkSession
     events.groupBy(to_date(col("ts")).as("day"))
       .agg(
-        HllSketch.hll_sketch_buffer(s, col("user_id"), p).as("sketch"),
+        HllSketch.hll_sketch_buffer(col("user_id"), p).as("sketch"),
         count(lit(1)).as("n_events"))
   }
 
@@ -38,11 +37,10 @@ object Sketches {
     * 28-day, all-time) off the same stored table.
     */
   def weeklyDistinctUsers(sketchTable: DataFrame): DataFrame = {
-    val s = sketchTable.sparkSession
     sketchTable
       .groupBy(date_trunc("week", col("day")).cast("date").as("week_start"))
       .agg(
-        HllSketch.hll_merge(s, col("sketch")).as("est_users"),
+        HllSketch.hll_merge(col("sketch")).as("est_users"),
         count(lit(1)).as("n_days"),
         sum(col("n_events")).as("n_events"))
       .select(date_format(col("week_start"), "yyyy-MM-dd").as("week_start"),
@@ -56,10 +54,9 @@ object Sketches {
     * [[graft.functions.KmvSketch.kmv_merge_sample]]).
     */
   def dailyUserSketchesKmv(events: DataFrame, k: Int = 256): DataFrame = {
-    val s = events.sparkSession
     events.groupBy(to_date(col("ts")).as("day"))
       .agg(
-        KmvSketch.kmv_sketch_buffer(s, col("user_id"), k).as("sketch"),
+        KmvSketch.kmv_sketch_buffer(col("user_id"), k).as("sketch"),
         count(lit(1)).as("n_events"))
   }
 
@@ -68,11 +65,10 @@ object Sketches {
     * buffers, never touching raw events.
     */
   def weeklyDistinctUsersKmv(sketchTable: DataFrame): DataFrame = {
-    val s = sketchTable.sparkSession
     sketchTable
       .groupBy(date_trunc("week", col("day")).cast("date").as("week_start"))
       .agg(
-        KmvSketch.kmv_merge_estimate(s, col("sketch")).as("est_users"),
+        KmvSketch.kmv_merge_estimate(col("sketch")).as("est_users"),
         count(lit(1)).as("n_days"),
         sum(col("n_events")).as("n_events"))
       .select(date_format(col("week_start"), "yyyy-MM-dd").as("week_start"),
@@ -105,16 +101,15 @@ object Sketches {
     */
   def sketchBounds(lineitem: DataFrame, events: DataFrame,
                    kmvK: Int = 64): DataFrame = {
-    val s = lineitem.sparkSession
     val kmvBound = 3.0 / math.sqrt(kmvK - 2.0)
     // flag scopes: single-pass HLL vs merged per-linestatus partials
     val flagSingle = lineitem.groupBy("l_returnflag").agg(
-      HllSketch.hll_distinct(s, col("l_partkey")).as("est"),
+      HllSketch.hll_distinct(col("l_partkey")).as("est"),
       count_distinct(col("l_partkey")).as("exact_n"))
     val flagMerged = lineitem.groupBy("l_returnflag", "l_linestatus")
-      .agg(HllSketch.hll_sketch_buffer(s, col("l_partkey")).as("sk"))
+      .agg(HllSketch.hll_sketch_buffer(col("l_partkey")).as("sk"))
       .groupBy("l_returnflag")
-      .agg(HllSketch.hll_merge(s, col("sk")).as("est_merged"))
+      .agg(HllSketch.hll_merge(col("sk")).as("est_merged"))
     val hllFlag = flagSingle.join(flagMerged, "l_returnflag").select(
       concat(lit("hll_flag:"), col("l_returnflag")).as("scope"),
       col("exact_n"),
@@ -132,16 +127,16 @@ object Sketches {
     val wkSingle = events
       .groupBy(date_trunc("week", col("ts")).cast("date").as("wk"))
       .agg(count_distinct(col("user_id")).as("exact_n"),
-        HllSketch.hll_distinct(s, col("user_id")).as("hll_single"),
-        KmvSketch.kmv_distinct(s, col("user_id"), kmvK).as("kmv_single"))
+        HllSketch.hll_distinct(col("user_id")).as("hll_single"),
+        KmvSketch.kmv_distinct(col("user_id"), kmvK).as("kmv_single"))
       .select(date_format(col("wk"), "yyyy-MM-dd").as("week_start"),
         col("exact_n"), col("hll_single"), col("kmv_single"))
     val wkMerged = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(HllSketch.hll_sketch_buffer(s, col("user_id")).as("hsk"),
-        KmvSketch.kmv_sketch_buffer(s, col("user_id"), kmvK).as("ksk"))
+      .agg(HllSketch.hll_sketch_buffer(col("user_id")).as("hsk"),
+        KmvSketch.kmv_sketch_buffer(col("user_id"), kmvK).as("ksk"))
       .groupBy(date_trunc("week", col("day")).cast("date").as("wk"))
-      .agg(HllSketch.hll_merge(s, col("hsk")).as("hll_merged"),
-        KmvSketch.kmv_merge_estimate(s, col("ksk")).as("kmv_merged"))
+      .agg(HllSketch.hll_merge(col("hsk")).as("hll_merged"),
+        KmvSketch.kmv_merge_estimate(col("ksk")).as("kmv_merged"))
       .select(date_format(col("wk"), "yyyy-MM-dd").as("week_start"),
         col("hll_merged"), col("kmv_merged"))
     val weekly = wkSingle.join(wkMerged, "week_start")
@@ -173,11 +168,9 @@ object Sketches {
     * buffer per group.
     */
   def dailyValueSketches(events: DataFrame, k: Int = 65536): DataFrame = {
-    val s = events.sparkSession
     events.groupBy(to_date(col("ts")).as("day"))
       .agg(
-        QuantileSketch.qsk_buffer(s,
-          round(col("value") * 100).cast("long"), k).as("sketch"),
+        QuantileSketch.qsk_buffer(round(col("value") * 100).cast("long"), k).as("sketch"),
         count(col("value")).as("n_values"))
   }
 
@@ -188,14 +181,13 @@ object Sketches {
     * bookkeeping sum in the output (`n_values` vs `n_sketch_total`).
     */
   def weeklyValueQuantiles(sketchTable: DataFrame): DataFrame = {
-    val s = sketchTable.sparkSession
     sketchTable
       .groupBy(date_trunc("week", col("day")).cast("date").as("week_start"))
       .agg(
-        QuantileSketch.qsk_merge_quantile(s, col("sketch"), 0.5).as("p50_cents"),
-        QuantileSketch.qsk_merge_quantile(s, col("sketch"), 0.9).as("p90_cents"),
-        QuantileSketch.qsk_merge_quantile(s, col("sketch"), 0.99).as("p99_cents"),
-        QuantileSketch.qsk_merge_total(s, col("sketch")).as("n_sketch_total"),
+        QuantileSketch.qsk_merge_quantile(col("sketch"), 0.5).as("p50_cents"),
+        QuantileSketch.qsk_merge_quantile(col("sketch"), 0.9).as("p90_cents"),
+        QuantileSketch.qsk_merge_quantile(col("sketch"), 0.99).as("p99_cents"),
+        QuantileSketch.qsk_merge_total(col("sketch")).as("n_sketch_total"),
         sum(col("n_values")).as("n_values"))
       .select(date_format(col("week_start"), "yyyy-MM-dd").as("week_start"),
         col("n_values"), col("n_sketch_total"),
@@ -230,10 +222,9 @@ object Sketches {
     */
   def heavyHitterTokens(documents: DataFrame, capacity: Int = 64,
                         requireExact: Boolean = false): DataFrame = {
-    val s = documents.sparkSession
     val agged = documents
       .select(explode(split(col("text"), " ")).as("token"))
-      .agg(graft.functions.FreqSketch.mg_topk(s, col("token"), capacity).as("hh"),
+      .agg(graft.functions.FreqSketch.mg_topk(col("token"), capacity).as("hh"),
         count(lit(1)).as("n_total"))
     val checked = if (!requireExact) agged else {
       val mass = aggregate(col("hh"), lit(0L), (a, e) => a + e.getField("count"))

@@ -560,11 +560,10 @@ object StreamingOps {
     */
   def windowedDistinctUsers(events: DataFrame, watermark: String = "10 minutes",
                             p: Int = 14): DataFrame = {
-    val spark = events.sparkSession
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(graft.functions.HllSketch.hll_distinct(spark, col("user_id"), p)
+      .agg(graft.functions.HllSketch.hll_distinct(col("user_id"), p)
         .as("approx_users"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("approx_users"))
@@ -582,11 +581,10 @@ object StreamingOps {
     */
   def windowedTopItems(events: DataFrame, watermark: String = "10 minutes",
                        capacity: Int = 64): DataFrame = {
-    val spark = events.sparkSession
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(graft.functions.FreqSketch.mg_topk(spark, col("event_type"), capacity)
+      .agg(graft.functions.FreqSketch.mg_topk(col("event_type"), capacity)
         .as("top_items"))
       .select(col("window.start").as("window_start"), col("top_items"))
   }
@@ -603,14 +601,13 @@ object StreamingOps {
     */
   def windowedValueQuantiles(events: DataFrame, watermark: String = "10 minutes",
                              k: Int = 4096): DataFrame = {
-    val spark = events.sparkSession
     val cents = round(col("value") * 100).cast("long")
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(
-        graft.functions.QuantileSketch.qsk_quantile(spark, cents, k, 0.5).as("p50_cents"),
-        graft.functions.QuantileSketch.qsk_quantile(spark, cents, k, 0.99).as("p99_cents"))
+        graft.functions.QuantileSketch.qsk_quantile(cents, k, 0.5).as("p50_cents"),
+        graft.functions.QuantileSketch.qsk_quantile(cents, k, 0.99).as("p99_cents"))
       .select(col("window.start").as("window_start"),
         col("p50_cents"), col("p99_cents"))
   }

@@ -20,7 +20,6 @@ class EdgeCasesSpec extends AnyFunSuite with SparkSpec {
 
   test("zero-vector cosine: native yields NaN; ANSI composed form throws (documented divergence)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark) // before analysis
     val d = Seq((0L, Seq(0f, 0f, 0f), 0), (1L, Seq(1f, 0f, 0f), 0))
       .toDF("vec_id", "embedding", "label")
     val zero = d.filter($"vec_id" === 0)
@@ -40,7 +39,6 @@ class EdgeCasesSpec extends AnyFunSuite with SparkSpec {
 
   test("mismatched-length cosine: native and composed twins both yield NULL") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val d = Seq((0L, Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("id", "a", "b")
     // native expression: explicit NULL on length mismatch
     val native = d.select(graft.functions.GraftFunctions.cosine_sim(col("a"), col("b")))
@@ -165,7 +163,7 @@ class EdgeCasesSpec extends AnyFunSuite with SparkSpec {
       graft.functions.ZOrder.interleave(0x7FFFFFFFL, 0L))
     // kmv over an all-null column estimates 0
     val nulls = Seq.empty[Option[Long]].toDF("v")
-    assert(nulls.agg(graft.functions.KmvSketch.kmv_distinct(spark, col("v")))
+    assert(nulls.agg(graft.functions.KmvSketch.kmv_distinct(col("v")))
       .collect()(0).getLong(0) === 0L)
     assert(graft.ext.TextOps.repeatedTokenMap(empty).collect().isEmpty)
     // a single observed day: RANGE window contains itself; lags are NULL
@@ -501,7 +499,7 @@ class EdgeCasesSpec extends AnyFunSuite with SparkSpec {
   test("hll on empty input estimates 0") {
     import spark.implicits._
     val empty = Seq.empty[Long].toDF("v")
-    val est = empty.agg(graft.functions.HllSketch.hll_distinct(spark, col("v")))
+    val est = empty.agg(graft.functions.HllSketch.hll_distinct(col("v")))
       .collect()(0).getLong(0)
     assert(est === 0L)
   }

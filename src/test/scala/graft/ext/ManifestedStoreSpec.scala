@@ -185,7 +185,6 @@ class ManifestedStoreSpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfIndexStoreTombstone(spark,
       emb.filter(col("vec_id") % 5 === 2).select("vec_id"), inc, 1L)
     IvfIncremental.fold(spark, inc)
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Unpack.int8_unpack
     val snap = ManifestedTable.snapshot(spark, s"$inc/assignments_m").get
     val fromRows = ManifestedTable.read(spark, s"$inc/assignments_m", snap)

@@ -45,7 +45,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pq_encode matches an independent argmin reference on deterministic pseudo-random codes") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(20260815L)
     val dim = 16; val nSub = 4; val k = 5
     val matrix = Array.fill(k * dim)(rnd.nextInt(255) - 127)
@@ -70,7 +69,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pq_adc equals int_dot(query, pq_recon(codes)) and rsq equals the recon self-dot") {
-    graft.functions.GraftFunctions.register(spark)
     val d = sf("sf0.001")
     import graft.functions.PqCodes.{pq_encode, pq_lut, pq_adc, pq_recon}
     import graft.functions.IntDot.int_dot
@@ -112,7 +110,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("malformed pairings go NULL, never crash: foreign codes vs a smaller lut, oversized codebook") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.PqCodes.{pq_adc, pq_encode}
     import spark.implicits._
     // lut of 2 subspaces × 4 entries; a code byte 7 points past k=4
@@ -346,7 +343,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
     // cosine — cross-checked against the exact scan's scores
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
-    graft.functions.GraftFunctions.register(spark)
     val codes = d.select(col("vec_id"), int8_codes(col("embedding")).as("qv"))
       .withColumn("qsq", int_dot(col("qv"), col("qv"))).filter(col("qsq") > 0)
     val rankedIds = codes
@@ -452,7 +448,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
     "row-for-row; appends encode residuals under the FIXED store; retrain " +
     "re-takes residuals under the trained centroids") {
     import org.apache.spark.sql.functions.{col, md5, substring}
-    graft.functions.GraftFunctions.register(spark)
     val d = sf("sf0.001")
     // static store: the residual ADC probe IS the in-memory IVFADC
     val fullDir = java.nio.file.Files.createTempDirectory("graft_adc_full")
@@ -609,7 +604,6 @@ class PqSpec extends AnyFunSuite with SparkSpec {
 
   test("codebooks past 127 entries: unsigned entry-id decode renders and " +
     "indexes faithfully (the round-16 cap lift)") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     import graft.functions.PqCodes.pq_encode
     import graft.functions.Int8Unpack.int8_unpack

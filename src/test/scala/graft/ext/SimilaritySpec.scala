@@ -261,7 +261,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("int8_codes / int_dot: native codegen loops equal the composed twins") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.IntDot.int_dot
     // real table + planted NaN / zero / negative extremes
@@ -592,7 +591,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     import graft.functions.IntDot.int_dot
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.IntDotBytes.int_dot_bytes
-    graft.functions.GraftFunctions.register(spark)
     // real corpus + planted degenerates (zero vector, NaN element)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select("vec_id", "embedding")
@@ -813,7 +811,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     import graft.functions.Int8Bytes.int8_bytes
     import graft.functions.Int8Codes.int8_codes
     import graft.functions.Int8Unpack.int8_unpack
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     // unpack ≡ codes, element-wise over the real corpus
     val mism = d.select(int8_unpack(int8_bytes(col("embedding"))).as("u"),
@@ -874,7 +871,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("ivfIndexStoreTrain: iters = 0 IS the reseed; training preserves " +
       "the partition; the trained store still probes complete") {
     import org.apache.spark.sql.functions.{col, md5, substring}
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
     def freshStore(tag: String): String = {
@@ -943,7 +939,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("lloyd_stats sidecar: init writes it, append merges it, and the " +
       "O(batch) centroid update equals the union one-epoch Lloyd update") {
     import org.apache.spark.sql.functions.{col, md5, substring}
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
     val dir = java.nio.file.Files.createTempDirectory("graft_lloyd_sc").toString + "/idx"
@@ -1002,7 +997,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("ivf store compact: days fold without moving an assignment, the " +
       "sidecar absorbs them, and the post-fold store supports every op") {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cpt")
       .toString + "/idx"
@@ -1080,7 +1074,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("store delete: victims vanish from raw AND ADC probes, the rows equal " +
       "a survivor assignment under the same centroids, and the store fscks clean") {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft_del").toString + "/idx"
     Similarity.ivfIndexStoreInit(d, dir)
@@ -1128,7 +1121,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("PQ sidecar survives a retrain: codebook verbatim, per-vector codes " +
       "unchanged, partitioning follows the trained lists, probe still answers") {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_swap").toString + "/idx"
     Similarity.ivfIndexStoreInit(d, dir)

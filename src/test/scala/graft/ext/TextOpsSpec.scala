@@ -822,7 +822,6 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     // null propagates through the expression (UnaryExpression default)
     val d = docs((2L, "x", "en"))
     import org.apache.spark.sql.functions.{col, lit}
-    graft.functions.GraftFunctions.register(spark)
     val r = d.select(UnicodeNormalize.unicode_normalize(
       lit(null).cast("string")).as("n")).collect()(0)
     assert(r.isNullAt(0))

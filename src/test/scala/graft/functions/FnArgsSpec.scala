@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
@@ -12,18 +12,9 @@ import graft.SparkSpec
   */
 class FnArgsSpec extends AnyFunSuite with SparkSpec {
 
-  def registered: SparkSession = {
-    GraftFunctions.register(spark)
-    graft.functions.Md5MinHashSketch.register(spark)
-    graft.functions.MinHashSketch.register(spark)
-    graft.functions.QuantileSketch.register(spark)
-    spark
-  }
-
   private def analysisErr(sql: String): AnalysisException = {
-    val s = registered
-    s.range(3).selectExpr("CAST(id AS STRING) AS t", "id AS k").createOrReplaceTempView("fn_args_t")
-    intercept[AnalysisException] { s.sql(sql).collect() }
+    spark.range(3).selectExpr("CAST(id AS STRING) AS t", "id AS k").createOrReplaceTempView("fn_args_t")
+    intercept[AnalysisException] { spark.sql(sql).collect() }
   }
 
   test("winnow_fps: missing parameters fail with WRONG_NUM_ARGS, not IOOBE") {
@@ -51,22 +42,22 @@ class FnArgsSpec extends AnyFunSuite with SparkSpec {
       .getCondition.startsWith("WRONG_NUM_ARGS"))
     assert(analysisErr("SELECT zorder(k) FROM fn_args_t")
       .getCondition.startsWith("WRONG_NUM_ARGS"))
+    assert(analysisErr("SELECT kmv_distinct(k, 16, 2) FROM fn_args_t")
+      .getCondition.startsWith("WRONG_NUM_ARGS"))
   }
 
   test("qsk_quantile: SQL decimal literal accepted for p, non-literal rejected") {
-    val s = registered
-    s.range(10).selectExpr("id AS v").createOrReplaceTempView("fn_args_v")
+    spark.range(10).selectExpr("id AS v").createOrReplaceTempView("fn_args_v")
     // 0.5 parses as DECIMAL — must be accepted as the quantile literal
-    val med = s.sql("SELECT qsk_quantile(v, 128, 0.5) FROM fn_args_v").collect()(0)
+    val med = spark.sql("SELECT qsk_quantile(v, 128, 0.5) FROM fn_args_v").collect()(0)
     assert(!med.isNullAt(0))
     val e = analysisErr("SELECT qsk_quantile(t, 128, k) FROM fn_args_t")
     assert(e.getCondition === "NON_FOLDABLE_ARGUMENT")
   }
 
   test("valid literal forms still resolve (foldable non-Literal expressions too)") {
-    val s = registered
     // 2+2 is foldable but not a Literal node — must be accepted
-    val n = s.sql("SELECT winnow_fps('a b c d e f g h', 2, 2+2)").collect()
+    val n = spark.sql("SELECT winnow_fps('a b c d e f g h', 2, 2+2)").collect()
     assert(n.length === 1)
   }
 }

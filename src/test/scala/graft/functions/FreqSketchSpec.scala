@@ -14,7 +14,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(exact.size <= 64, "fixture must stay in the exact regime")
     for (layout <- Seq(toks, toks.repartition(13))) {
-      val got = layout.agg(FreqSketch.mg_topk(spark, col("token"), 64).as("hh"))
+      val got = layout.agg(FreqSketch.mg_topk(col("token"), 64).as("hh"))
         .select(explode(col("hh")).as("e"))
         .select(col("e.item"), col("e.count"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -25,7 +25,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkSpec {
   test("result order is count desc, item asc on ties") {
     import spark.implicits._
     val d = Seq("b", "b", "a", "a", "c").toDF("k")
-    val rows = d.agg(FreqSketch.mg_topk(spark, col("k"), 8).as("hh"))
+    val rows = d.agg(FreqSketch.mg_topk(col("k"), 8).as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item"), col("e.count"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -68,7 +68,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkSpec {
     val d = rng.shuffle(stream).toDF("k")
     val n = stream.size
     val k = 32
-    val got = d.agg(FreqSketch.mg_topk(spark, col("k"), k).as("hh"))
+    val got = d.agg(FreqSketch.mg_topk(col("k"), k).as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item"), col("e.count"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -89,10 +89,10 @@ class FreqSketchSpec extends AnyFunSuite with SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("mg_tbl").toString + "/t"
     docs.select(col("source"), explode(split(col("text"), " ")).as("token"))
       .groupBy("source")
-      .agg(FreqSketch.mg_sketch_buffer(spark, col("token"), 64).as("sketch"))
+      .agg(FreqSketch.mg_sketch_buffer(col("token"), 64).as("sketch"))
       .write.mode("overwrite").parquet(path)
     val merged = spark.read.parquet(path)
-      .agg(FreqSketch.mg_merge_topk(spark, col("sketch")).as("hh"))
+      .agg(FreqSketch.mg_merge_topk(col("sketch")).as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item"), col("e.count"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -106,7 +106,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val d = Seq(1L, 2L).toDF("k")
     val e = intercept[Exception] {
-      d.agg(FreqSketch.mg_topk(spark, col("k"), 8)).collect()
+      d.agg(FreqSketch.mg_topk(col("k"), 8)).collect()
     }
     assert(e.getMessage.toLowerCase.contains("string"))
   }

@@ -10,7 +10,7 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
   test("below k the sketch is exact (the buffer IS the distinct set)") {
     val ev = Tables.events(spark, sf)
     val got = ev.groupBy("event_type")
-      .agg(KmvSketch.kmv_distinct(spark, col("user_id"), 256).as("est"))
+      .agg(KmvSketch.kmv_distinct(col("user_id"), 256).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = ev.groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("n"))
@@ -22,7 +22,7 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
   test("above k the estimator lands within the 1.04/sqrt(k) envelope (~3 sigma)") {
     val li = Tables.lineitem(spark, sf)
     val exact = li.select("l_orderkey").distinct().count().toDouble
-    val est = li.agg(KmvSketch.kmv_distinct(spark, col("l_orderkey"), 256))
+    val est = li.agg(KmvSketch.kmv_distinct(col("l_orderkey"), 256))
       .collect()(0).getLong(0).toDouble
     assert(exact > 256 * 4, "fixture must exercise the estimation regime")
     val err = math.abs(est - exact) / exact
@@ -33,14 +33,14 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
     val ev = Tables.events(spark, sf)
     val path = java.nio.file.Files.createTempDirectory("kmv_tbl").toString + "/t"
     ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(KmvSketch.kmv_sketch_buffer(spark, col("user_id"), 64).as("sketch"))
+      .agg(KmvSketch.kmv_sketch_buffer(col("user_id"), 64).as("sketch"))
       .write.mode("overwrite").parquet(path)
     val stored = spark.read.parquet(path)
     val merged = stored.agg(
-      KmvSketch.kmv_merge_estimate(spark, col("sketch")).as("est"),
-      KmvSketch.kmv_merge_sample(spark, col("sketch")).as("sample"))
+      KmvSketch.kmv_merge_estimate(col("sketch")).as("est"),
+      KmvSketch.kmv_merge_sample(col("sketch")).as("sample"))
       .collect()(0)
-    val direct = ev.agg(KmvSketch.kmv_distinct(spark, col("user_id"), 64))
+    val direct = ev.agg(KmvSketch.kmv_distinct(col("user_id"), 64))
       .collect()(0).getLong(0)
     assert(merged.getLong(0) === direct, "merge must be lossless vs one pass")
     // the merged sample must be EXACTLY the k hash-smallest distinct keys
@@ -53,9 +53,9 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
 
   test("merge is partition-layout independent") {
     val ev = Tables.events(spark, sf)
-    val a = ev.agg(KmvSketch.kmv_distinct(spark, col("user_id"), 32)).collect()(0).getLong(0)
+    val a = ev.agg(KmvSketch.kmv_distinct(col("user_id"), 32)).collect()(0).getLong(0)
     val b = ev.repartition(13)
-      .agg(KmvSketch.kmv_distinct(spark, col("user_id"), 32)).collect()(0).getLong(0)
+      .agg(KmvSketch.kmv_distinct(col("user_id"), 32)).collect()(0).getLong(0)
     assert(a === b)
   }
 
@@ -64,15 +64,15 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
     // collision-biased estimates and meaningless sample values
     val ev = Tables.events(spark, sf)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
-      ev.agg(KmvSketch.kmv_distinct(spark, col("event_type"), 64)).collect()
+      ev.agg(KmvSketch.kmv_distinct(col("event_type"), 64)).collect()
     }
     assert(ex.getMessage.toLowerCase.contains("integral"), ex.getMessage)
     val ex2 = intercept[org.apache.spark.sql.AnalysisException] {
-      ev.agg(KmvSketch.kmv_sketch_buffer(spark, col("ts"), 64)).collect()
+      ev.agg(KmvSketch.kmv_sketch_buffer(col("ts"), 64)).collect()
     }
     assert(ex2.getMessage.toLowerCase.contains("integral"), ex2.getMessage)
     // the documented workaround stays accepted: hash to bigint first
-    val ok = ev.agg(KmvSketch.kmv_distinct(spark, xxhash64(col("event_type")), 64))
+    val ok = ev.agg(KmvSketch.kmv_distinct(xxhash64(col("event_type")), 64))
       .collect()(0).getLong(0)
     assert(ok > 0)
   }

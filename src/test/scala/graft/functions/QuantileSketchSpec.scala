@@ -21,7 +21,7 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
     val xs = (0 until 20000).map(i => ((i * 2654435761L) % 500) * ((i % 7) + 1) % 500)
     val df = xs.toDF("x")
     for (p <- Seq(0.0, 0.01, 0.25, 0.5, 0.9, 0.99, 1.0)) {
-      val got = df.agg(QuantileSketch.qsk_quantile(spark, col("x"), 1024, p))
+      val got = df.agg(QuantileSketch.qsk_quantile(col("x"), 1024, p))
         .collect()(0).getLong(0)
       assert(got === exactQuantile(xs, p), s"p=$p")
     }
@@ -33,17 +33,17 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
     for (k <- Seq(128, 65536)) { // under- and over-capacity vs ~6.6k distinct cents
       val path = java.nio.file.Files.createTempDirectory(s"qsk_tbl_$k").toString + "/t"
       ev.groupBy(to_date(col("ts")).as("day"))
-        .agg(QuantileSketch.qsk_buffer(spark, cents, k).as("sketch"))
+        .agg(QuantileSketch.qsk_buffer(cents, k).as("sketch"))
         .write.mode("overwrite").parquet(path)
       val stored = spark.read.parquet(path)
       for (p <- Seq(0.1, 0.5, 0.9, 0.99)) {
-        val merged = stored.agg(QuantileSketch.qsk_merge_quantile(spark, col("sketch"), p))
+        val merged = stored.agg(QuantileSketch.qsk_merge_quantile(col("sketch"), p))
           .collect()(0).getLong(0)
-        val direct = ev.agg(QuantileSketch.qsk_quantile(spark, cents, k, p))
+        val direct = ev.agg(QuantileSketch.qsk_quantile(cents, k, p))
           .collect()(0).getLong(0)
         assert(merged === direct, s"k=$k p=$p: merge must reproduce the one-pass state")
       }
-      val total = stored.agg(QuantileSketch.qsk_merge_total(spark, col("sketch")))
+      val total = stored.agg(QuantileSketch.qsk_merge_total(col("sketch")))
         .collect()(0).getLong(0)
       assert(total === ev.filter(col("value").isNotNull).count(),
         "row total rides the buffer exactly, capacity regardless")
@@ -54,7 +54,7 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
     val ev = Tables.events(spark, sf)
     val cents = round(col("value") * 100).cast("long")
     def q(df: org.apache.spark.sql.DataFrame, p: Double): Long =
-      df.agg(QuantileSketch.qsk_quantile(spark, cents, 128, p)).collect()(0).getLong(0)
+      df.agg(QuantileSketch.qsk_quantile(cents, 128, p)).collect()(0).getLong(0)
     for (p <- Seq(0.25, 0.5, 0.95)) {
       val a = q(ev, p)
       assert(q(ev.repartition(13), p) === a, s"p=$p repartition")
@@ -70,7 +70,7 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
     val n = xs.size
     val k = 1024
     for (p <- Seq(0.1, 0.5, 0.9)) {
-      val got = df.agg(QuantileSketch.qsk_quantile(spark, col("x"), k, p))
+      val got = df.agg(QuantileSketch.qsk_quantile(col("x"), k, p))
         .collect()(0).getLong(0)
       val trueRank = xs.count(_ <= got).toDouble
       val err = math.abs(trueRank - p * n) / n
@@ -84,10 +84,10 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
     val df = Seq[(Integer, String)]((1, "a"), (null, "a"), (3, "a"))
       .toDF("x", "g")
     val r = df.filter(col("g") === "a")
-      .agg(QuantileSketch.qsk_quantile(spark, col("x"), 16, 0.5)).collect()(0)
+      .agg(QuantileSketch.qsk_quantile(col("x"), 16, 0.5)).collect()(0)
     assert(r.getLong(0) === 1L) // N=2 -> ceil(0.5*2)=1 -> first of {1,3}
     val empty = df.filter(col("g") === "zzz")
-      .agg(QuantileSketch.qsk_quantile(spark, col("x"), 16, 0.5)).collect()(0)
+      .agg(QuantileSketch.qsk_quantile(col("x"), 16, 0.5)).collect()(0)
     assert(empty.isNullAt(0))
   }
 
@@ -115,18 +115,18 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
 
   test("k mismatch on merge raises; non-integral and bad p are rejected at analysis") {
     import spark.implicits._
-    val a = Seq(1L, 2L).toDF("x").agg(QuantileSketch.qsk_buffer(spark, col("x"), 16).as("s"))
-    val b = Seq(3L).toDF("x").agg(QuantileSketch.qsk_buffer(spark, col("x"), 32).as("s"))
+    val a = Seq(1L, 2L).toDF("x").agg(QuantileSketch.qsk_buffer(col("x"), 16).as("s"))
+    val b = Seq(3L).toDF("x").agg(QuantileSketch.qsk_buffer(col("x"), 32).as("s"))
     val ex = intercept[Exception] {
-      a.union(b).agg(QuantileSketch.qsk_merge_quantile(spark, col("s"), 0.5)).collect()
+      a.union(b).agg(QuantileSketch.qsk_merge_quantile(col("s"), 0.5)).collect()
     }
     assert(ex.getMessage.contains("k mismatch") ||
       Option(ex.getCause).exists(_.getMessage.contains("k mismatch")))
     assertThrows[Exception] {
-      Seq("a").toDF("x").agg(QuantileSketch.qsk_quantile(spark, col("x"), 16, 0.5)).collect()
+      Seq("a").toDF("x").agg(QuantileSketch.qsk_quantile(col("x"), 16, 0.5)).collect()
     }
     assertThrows[Exception] {
-      Seq(1L).toDF("x").agg(QuantileSketch.qsk_quantile(spark, col("x"), 16, 1.5)).collect()
+      Seq(1L).toDF("x").agg(QuantileSketch.qsk_quantile(col("x"), 16, 1.5)).collect()
     }
   }
 }

@@ -27,7 +27,6 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
 
   test("expression and codegen path agree with the JVM helper") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((5L, 3L), (0L, 0L), (0x7FFFFFFFL, 0x7FFFFFFFL), (12345L, 67890L))
       .toDF("a", "b")
     val got = df.select(ZOrder.zorder(col("a"), col("b"))).collect().map(_.getLong(0))
@@ -42,7 +41,6 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
     // shows; z-ordering a SPARSE key grid buys little (consecutive curve
     // positions jump across empty space), which is also true at scale
     val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
-    GraftFunctions.register(spark)
     // dimensions must be normalized to comparable bit-widths before
     // interleaving (partkey ~11 bits, suppkey ~7): otherwise the wider
     // key's high bits dominate the sort and the curve degrades to a
@@ -98,7 +96,6 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
         .agg(avg(col("cr")), avg(col("dr"))).collect()(0)
       (r.getDouble(0), r.getDouble(1))
     }
-    graft.functions.GraftFunctions.register(spark)
     val custDomain = 1499.0; val dayDomain = 2404.0
     val (zc, zd) = avgRanges(ZOrder.zorder(col("o_custkey"), day))
     val (cc, cd) = avgRanges(col("o_custkey")) // single-dim clustering

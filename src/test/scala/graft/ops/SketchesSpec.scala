@@ -36,7 +36,7 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
     val direct = ev
       .groupBy(date_format(date_trunc("week", col("ts")), "yyyy-MM-dd").as("week_start"))
       .agg(
-        HllSketch.hll_distinct(spark, col("user_id")).as("est_users"),
+        HllSketch.hll_distinct(col("user_id")).as("est_users"),
         countDistinct(to_date(col("ts"))).as("n_days"),
         count(lit(1)).as("n_events"))
       .select(col("week_start"), col("n_days"), col("n_events"), col("est_users"))
@@ -71,7 +71,7 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
     val ev = Tables.events(spark, sf)
     val est = Sketches.dailyUserSketches(ev)
       .groupBy("day") // one sketch per group: merge = estimate of that day
-      .agg(HllSketch.hll_merge(spark, col("sketch")).as("est"))
+      .agg(HllSketch.hll_merge(col("sketch")).as("est"))
       .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
     val exact = ev.groupBy(to_date(col("ts")).as("day"))
       .agg(countDistinct(col("user_id")).as("n"))

@@ -27,7 +27,7 @@ class VectorizedCosineSpec extends AnyFunSuite with SparkSpec {
     val fused = VectorizedCosine.score(emb, q).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val viaExpr = emb.select(col("vec_id"),
-        graft.ext.Similarity.nativeCosine(emb,
+        graft.ext.Similarity.nativeCosine(
           col("embedding").cast("array<double>"),
           array(q.map(lit).toIndexedSeq: _*)).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

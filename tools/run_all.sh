@@ -1,8 +1,10 @@
 #!/bin/bash
 # Full driver-simulation: compile, test, verify + oracle compare, bench,
-# capstone ETL. Usage: tools/run_all.sh
-set -e
-cd /root/repo
+# capstone ETL, for the checkout this script lives in. Usage: tools/run_all.sh
+# pipefail: a failing step stops the run even when its output is piped
+set -e -o pipefail
+. "$(dirname "${BASH_SOURCE[0]}")/java_env.sh"
+cd "$ROOT"
 # sbt resolves offline, as in the tier-1 test line
 export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 # one core per host CPU, half the host's RAM for the heap (2-8 GB)
@@ -11,16 +13,10 @@ HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ?
 echo "== compile"; sbt -batch compile | tail -1
 echo "== test"; sbt -batch test 2>&1 | grep -E 'Tests:' | tail -1
 echo "== verify sf0.01"
+# check_oracle.py below judges Verify's output; a failed query shows there
 rm -rf /tmp/graft_verify && ./tools/run_verify.sh /root/testdata/sf0.01 /tmp/graft_verify 2>&1 | grep '\[verify\]' || true
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify | tail -3
-# the check's own exit status: tail's would hide a failure from set -e
-[ "${PIPESTATUS[0]}" -eq 0 ]
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-AO=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  AO="$AO --add-opens java.base/$p=ALL-UNNAMED"
-done
 echo "== bench sf0.1"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS java $AO -Xmx$HEAP -cp "$CP" graft.Bench 2>/dev/null | tail -1
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS java $ADD_OPENS -Xmx$HEAP -cp "$CP" graft.Bench 2>/dev/null | tail -1
 echo "== capstone ETL"
-rm -rf /tmp/graft_capstone && java $AO -Xmx8g -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1
+rm -rf /tmp/graft_capstone && java $ADD_OPENS -Xmx8g -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1

@@ -4,14 +4,7 @@
 set -e
 SF=${1:-/root/testdata/sf0.1}
 ONLY=${2:-}
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "${BASH_SOURCE[0]}")/java_env.sh"
 # one core per host CPU and half the host's RAM for the heap (2-8 GB),
 # as the tier-1 test line sizes SPARK_DRIVER_MEM
 CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}

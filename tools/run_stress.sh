@@ -5,12 +5,5 @@
 set -e
 SF=${1:-/root/testdata/sf0.1}
 FACTOR=${2:-10}
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "${BASH_SOURCE[0]}")/java_env.sh"
 exec java $ADD_OPENS -Xmx24g -cp "$CP" graft.StressBench "$SF" "$FACTOR"
