@@ -407,30 +407,26 @@ object IvfIncremental {
     * none. No existing partition file is read or rewritten: append
     * cost is O(batch) regardless of store size, and the next [[fold]]
     * compacts multi-entry partitions back to one file set as a side
-    * effect of rewriting whatever it touches (spec-pinned). The
-    * sidecar merges the batch's additive cells AFTER the commit — the
-    * same one documented rows-ahead-of-cells window every mutation
-    * has, repaired by [[statsRebuild]]. Returns the assigned batch.
+    * effect of rewriting whatever it touches (spec-pinned). The steps
+    * are the flat store's ([[Similarity.ivfAppendWith]]), with the data
+    * write + manifest commit running beside the batch's cell collect;
+    * the sidecar merges the batch's additive cells AFTER the commit —
+    * the same one documented rows-ahead-of-cells window every mutation
+    * has, repaired by [[statsRebuild]]. A crash before the commit
+    * leaves only unreferenced data files. Returns the assigned batch,
+    * unpersisted.
     */
   def append(spark: SparkSession, newVecs: DataFrame,
              dir: String): DataFrame = {
-    // sidecar read FIRST: fail loud before any write, the append rule
-    val statsBefore = Similarity.ivfIndexStoreLloydStats(spark, dir)
-    val snap = currentSnap(spark, dir)
-    val assigned = Similarity.ivfIndexAssign(newVecs,
-      Similarity.ivfIndexStoreCentroids(spark, dir)).persist()
-    try {
-      val rows = assigned
-        .select((Similarity.STORE_COLS :+ "centroid_id").map(col): _*)
+    val assigned = Similarity.ivfAppendWith(spark, newVecs, dir) { rows =>
+      val snap = currentSnap(spark, dir)
       val newEntries = ManifestedTable.writeData(spark, tbl(dir),
         snap.version + 1, rows, "centroid_id")
       ManifestedTable.commit(spark, tbl(dir),
         ManifestedTable.Snapshot(snap.version + 1,
           snap.entries ++ newEntries, snap.foldedDays, snap.tombDays))
-      Similarity.writeLloydStats(spark, dir,
-        Similarity.lloydMergeStats(statsBefore, statsOfRows(rows)))
-      ManifestedTable.gc(spark, tbl(dir))
-    } finally assigned.unpersist(blocking = false)
+    }
+    ManifestedTable.gc(spark, tbl(dir))
     assigned
   }
 
@@ -669,25 +665,22 @@ object LexIncremental {
     */
   def init(documents: DataFrame, dir: String, nBuckets: Int = 16): Unit = {
     val spark = documents.sparkSession
-    val (postings, dfreq, (nDocs, totalLen), tfc) =
-      TextOps.lexBatchFrames(documents)
-    val rows = postings.withColumn("bucket", TextOps.lexBucket(nBuckets))
-    // manifested postings and the dfreq sidecar are independent until
-    // the commit/stats markers land — concurrent jobs (§2.6) off the
-    // one persisted tf pass; commit then stats keep their order
-    try {
+    val (nDocs, totalLen) = TextOps.withLexBatch(documents, nBuckets) { b =>
+      // manifested postings and the dfreq sidecar are independent until
+      // the commit/stats markers land — concurrent jobs (§2.6) off the
+      // one persisted tf pass; commit then stats keep their order
       val entries = Jobs.concurrently(Seq(
-        () => Some(ManifestedTable.writeData(spark, tbl(dir), 1L, rows,
+        () => Some(ManifestedTable.writeData(spark, tbl(dir), 1L, b.postings,
           "bucket", cluster = false)),
         () => {
-          dfreq.withColumn("bucket", TextOps.lexBucket(nBuckets))
-            .write.mode("overwrite").partitionBy("bucket")
+          b.dfreq.write.mode("overwrite").partitionBy("bucket")
             .parquet(s"$dir/dfreq")
           None
         })).head.get
       ManifestedTable.commit(spark, tbl(dir),
         ManifestedTable.Snapshot(1L, entries, Nil, Nil))
-    } finally tfc.unpersist(blocking = false)
+      (b.nDocs, b.totalLen)
+    }
     Similarity.writeRenameAside(
       TextOps.lexStatsDf(spark, nDocs, totalLen, nBuckets),
       dir, "corpus_stats")
@@ -739,42 +732,28 @@ object LexIncremental {
   /** ATOMIC batch append: the batch's postings land as NEW per-bucket
     * entries — no existing file read or rewritten, O(batch) at any
     * store size — and one manifest commit makes them visible. The
-    * sidecars then merge selectively: only the batch-vocabulary
-    * buckets' `dfreq` partitions are rewritten (the round-18
-    * batch-sized merge), the one-row stats add. A crash between the
-    * commit and the sidecar merges is the store's documented
+    * steps and commit order are the flat store's
+    * ([[TextOps.lexAppendWith]]), with the data write + manifest commit
+    * standing where the flat postings append stands: the dfreq merge
+    * (only the batch-vocabulary buckets) is staged beside the data
+    * write and swapped in after the commit, then the one-row stats add.
+    *
+    * Crash windows: a crash before the commit leaves unreferenced data
+    * files (invisible; the next write of that version re-stages them)
+    * and at most an unadopted dfreq staging the next append clears —
+    * the store serves its pre-append state exactly. A crash between the
+    * commit and the sidecar swaps is the store's documented
     * rows-ahead-of-stats window — [[statsRebuild]] repairs it.
     */
   def append(spark: SparkSession, documents: DataFrame, dir: String): Unit = {
-    val (nDocs0, totalLen0, nBuckets) = TextOps.lexStoreStats(spark, dir)
-    val snap = currentSnap(spark, dir)
-    val (postings, dfreq, (nDocs, totalLen), tfc) =
-      TextOps.lexBatchFrames(documents)
-    val rows = postings.withColumn("bucket", TextOps.lexBucket(nBuckets))
-    val newEntries = ManifestedTable.writeData(spark, tbl(dir),
-      snap.version + 1, rows, "bucket", cluster = false)
-    ManifestedTable.commit(spark, tbl(dir),
-      ManifestedTable.Snapshot(snap.version + 1,
-        snap.entries ++ newEntries, snap.foldedDays, snap.tombDays))
-    val batchDfreq = dfreq.withColumn("bucket", TextOps.lexBucket(nBuckets))
-      .persist()
-    try {
-      val buckets = batchDfreq.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val merged = TextOps.lexStoreDfreq(spark, dir)
-        .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-        .unionByName(batchDfreq.select("token", "df", "bucket"))
-        .groupBy("token", "bucket").agg(sum(col("df")).as("df"))
-        .select("token", "df", "bucket")
-      Similarity.rewritePartitions(spark, s"$dir/dfreq", buckets, merged,
-        "bucket", cluster = false)
-    } finally {
-      batchDfreq.unpersist(blocking = false)
-      tfc.unpersist(blocking = false)
+    TextOps.lexAppendWith(spark, documents, dir) { rows =>
+      val snap = currentSnap(spark, dir)
+      val newEntries = ManifestedTable.writeData(spark, tbl(dir),
+        snap.version + 1, rows, "bucket", cluster = false)
+      ManifestedTable.commit(spark, tbl(dir),
+        ManifestedTable.Snapshot(snap.version + 1,
+          snap.entries ++ newEntries, snap.foldedDays, snap.tombDays))
     }
-    Similarity.writeRenameAside(
-      TextOps.lexStatsDf(spark, nDocs0 + nDocs, totalLen0 + totalLen,
-        nBuckets), dir, "corpus_stats")
     ManifestedTable.gc(spark, tbl(dir))
   }
 
@@ -929,11 +908,8 @@ object LexIncremental {
         () => if (affected.nonEmpty) {
           val baseAff = TextOps.lexStoreDfreq(spark, dir)
             .filter(col("bucket").isin(affected.map(Integer.valueOf): _*))
-          val merged = (dayDf.toSeq ++ tombDf.toSeq)
-            .foldLeft(baseAff)(_.unionByName(_))
-            .groupBy("token", "bucket").agg(sum(col("df")).as("df"))
+          val merged = TextOps.lexDfreqSum(baseAff +: (dayDf.toSeq ++ tombDf.toSeq))
             .filter(col("df") > 0)
-            .select("token", "df", "bucket")
           Similarity.rewritePartitions(spark, s"$dir/dfreq", affected,
             merged, "bucket", cluster = false)
         },

@@ -1360,11 +1360,19 @@ object Similarity {
       throw new java.io.IOException(
         s"no Lloyd-statistics sidecar at $p — the store predates the " +
           "round-16 layout; re-init, reseed, or train it to create one")
-    spark.read.parquet(p.toString)
+    spark.read.schema(LLOYD_STATS_SCHEMA).parquet(p.toString)
       .select("cluster", "pos", "s", "n").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
   }
+
+  /** The `lloyd_stats` columns as [[writeLloydStats]] writes them: a
+    * read declares them, so it runs no schema-inference job (pinned to
+    * the writer by a spec, like [[CENTROID_PROBE_SCHEMA]]).
+    */
+  private[ext] val LLOYD_STATS_SCHEMA: StructType = new StructType()
+    .add("cluster", IntegerType).add("pos", IntegerType)
+    .add("s", LongType).add("n", LongType)
 
   /** The per-cell statistics of stored assignment rows, read back from
     * store bytes (`int8_unpack` recovers the int codes) — one cheap
@@ -1527,38 +1535,69 @@ object Similarity {
     * Because the centroids are fixed at init, append-then-read equals
     * a from-scratch assignment of the union corpus under the same
     * seeds (spec-pinned) — assignments are immutable facts, so the
-    * store is append-only with no rewrite step.
+    * store is append-only with no rewrite step. The steps, commit
+    * order and crash window are [[ivfAppendWith]]'s; the rows land
+    * through a `mode("append")` parquet write, which is not atomic: a
+    * crash inside it leaves partial ROWS, with the sidecar not yet
+    * merged. Either way the rows are ahead of the sidecar, and
+    * [[ivfIndexStoreStatsRebuild]] re-derives it from the assignment
+    * bytes in one cheap scan (a train/reseed re-bases it as part of
+    * its swap). Returns the assigned batch, unpersisted: an action on
+    * it recomputes the quantize+argmax.
     */
   def ivfIndexStoreAppend(spark: org.apache.spark.sql.SparkSession,
-                          newVecs: DataFrame, dir: String): DataFrame = {
-    // the sidecar is read FIRST: a store without one (pre-round-16
-    // layout) must fail loud BEFORE any write — appending rows whose
-    // cells can't merge would silently break the sidecar invariant
-    val statsBefore = ivfIndexStoreLloydStats(spark, dir)
-    // persisted: the batch argmax feeds TWO actions here (the
-    // partitioned write and the statistics cells) and usually a third
-    // in the caller — one quantize+argmax pass instead of two or three
-    val assigned = ivfIndexAssign(newVecs, ivfIndexStoreCentroids(spark, dir))
-      .persist()
-    try {
-      clusterForWrite(assigned
-        .select((STORE_COLS :+ "centroid_id").map(col): _*), "centroid_id")
+                          newVecs: DataFrame, dir: String): DataFrame =
+    ivfAppendWith(spark, newVecs, dir) { rows =>
+      clusterForWrite(rows, "centroid_id")
         .write.mode("append").partitionBy("centroid_id")
         .parquet(s"$dir/assignments")
-      // merge the batch's additive statistics into the sidecar — ONE
-      // O(batch × nList) pass over the CACHED batch, keeping the
-      // sidecar ≡ per-cell aggregate of the consolidated lists so
-      // [[ivfIndexStoreUpdateCentroids]] never needs a corpus rescan.
-      // Failure honesty: the rows-append and this overwrite are two
-      // separate commits (parquet append is not atomic either — a
-      // mid-append crash leaves partial ROWS too), and the store is
-      // single-writer by contract; a crash between the two commits
-      // leaves appended rows unrepresented in the sidecar. That window
-      // is RECOVERABLE, not silent-forever: [[ivfIndexStoreStatsRebuild]]
-      // re-derives the sidecar from the assignment bytes in one cheap
-      // scan, and a train/reseed re-bases it as part of its swap.
-      writeLloydStats(spark, dir,
-        lloydMergeStats(statsBefore, lloydStatsOf(assigned)))
+    }
+
+  /** The ONE append core of the IVF stores, shared by the flat store
+    * ([[ivfIndexStoreAppend]]) and the manifested one
+    * ([[IvfIncremental.append]]), which differ only in how the batch's
+    * rows commit (`writeRows`, given the [[STORE_COLS]] + centroid_id
+    * rows):
+    *
+    *   1. the `lloyd_stats` sidecar is read FIRST: a store without one
+    *      (pre-round-16 layout) fails loud BEFORE any write — appending
+    *      rows whose cells can't merge would silently break the
+    *      sidecar invariant;
+    *   2. the batch is assigned against the stored centroids and
+    *      PERSISTED, the cache filled by one job — one quantize+argmax
+    *      pass for both jobs below; sidecar and centroids are read
+    *      under declared schemas, so no schema-inference job runs;
+    *   3. `writeRows` and the batch's additive cells
+    *      ([[lloydStatsOf]], a read-only O(batch × nList) collect) run
+    *      as CONCURRENT jobs (§2.6) over the one persisted batch;
+    *   4. only then the merged sidecar is written (rename-aside), so
+    *      it stays ≡ the per-cell aggregate of the consolidated lists
+    *      and [[ivfIndexStoreUpdateCentroids]] never rescans the corpus.
+    *
+    * Crash window (single-writer by contract): rows commit before the
+    * sidecar, so a crash between the two leaves appended rows
+    * unrepresented in the sidecar — detected by the fsck and the
+    * update's cross-check, repaired by the store's StatsRebuild.
+    * Returns the assigned batch, unpersisted.
+    */
+  private[ext] def ivfAppendWith(spark: org.apache.spark.sql.SparkSession,
+                                 newVecs: DataFrame, dir: String)
+                                (writeRows: DataFrame => Unit): DataFrame = {
+    val statsBefore = ivfIndexStoreLloydStats(spark, dir)
+    val assigned = ivfIndexAssign(newVecs,
+      spark.read.schema(CENTROID_PROBE_SCHEMA).parquet(liveCentroids(spark, dir)))
+      .persist()
+    try {
+      // fill the cache in ONE job first: two concurrent first readers
+      // of an unfilled cache may each run a job to fill it
+      assigned.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+      val batchStats = Jobs.concurrently(Seq(
+        () => {
+          writeRows(assigned.select((STORE_COLS :+ "centroid_id").map(col): _*))
+          None
+        },
+        () => Some(lloydStatsOf(assigned)))).flatten.head
+      writeLloydStats(spark, dir, lloydMergeStats(statsBefore, batchStats))
     } finally assigned.unpersist(blocking = false)
     assigned
   }
@@ -1607,7 +1646,8 @@ object Similarity {
         posexplode(int8_unpack(col("qb"))).as(Seq("pos", "v")))
       .groupBy("cluster", "pos")
       .agg(sum(col("v")).as("rs"), count(lit(1)).as("rn"))
-    val sidecar = spark.read.parquet(s"$dir/lloyd_stats")
+    val sidecar = spark.read.schema(LLOYD_STATS_SCHEMA)
+      .parquet(s"$dir/lloyd_stats")
       .select(col("cluster"), col("pos"), col("s").as("cs"),
         col("n").as("cn"))
     // full outer on the cell key: a cell present on one side only is
@@ -1674,9 +1714,8 @@ object Similarity {
                                      partitionCol: String = "centroid_id"): Unit = {
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      basePath.getParent, s".${basePath.getName}.delete-next")
-    adoptPartitionStaged(fs, basePath, staging, partitionCol, clean = false)
+    adoptPartitionStaged(fs, basePath, partitionStaging(basePath, "delete-next"),
+      partitionCol, clean = false)
   }
 
   /** Rewrite the affected hive partitions of a vec_id-keyed,
@@ -1729,8 +1768,7 @@ object Similarity {
       partitionCol: String, cluster: Boolean = true): Unit = {
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      basePath.getParent, s".${basePath.getName}.delete-next")
+    val staging = partitionStaging(basePath, "delete-next")
     adoptPartitionStaged(fs, basePath, staging, partitionCol, clean = true)
     // `cluster = false` for content that is already an aggregation
     // output (AQE sized those partitions to the data): the rebalance
@@ -1738,8 +1776,71 @@ object Similarity {
     // content (the delete path's pruned scan + anti-join) keeps it.
     (if (cluster) clusterForWrite(content, partitionCol) else content)
       .write.partitionBy(partitionCol).parquet(staging.toString)
+    swapStagedPartitions(fs, basePath, staging, parts, partitionCol)
+  }
+
+  /** A sibling dir of store table `base` that a per-partition rewrite
+    * stages under: `.NAME.delete-next`, which readers adopt from
+    * ([[adoptDeleteStaged]]), or `.NAME.append-staging`, which nothing
+    * adopts ([[stagePartitions]]).
+    */
+  private def partitionStaging(basePath: org.apache.hadoop.fs.Path,
+                               kind: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(basePath.getParent,
+      s".${basePath.getName}.$kind")
+
+  /** [[rewritePartitions]] split at its publish point, for a writer
+    * whose new partitions must not become adoptable before another
+    * commit lands — the lexical append stages its sidecar merges while
+    * its postings are still being written. This first half clears what
+    * a crashed writer left (a completed `.NAME.delete-next` is adopted
+    * first, as [[rewritePartitions]] does; a stale
+    * `.NAME.append-staging` is dropped), then stages `content`
+    * (aggregation-shaped, so not rebalanced) under
+    * `.NAME.append-staging`. No reader or writer adopts that name, so a
+    * crash before [[publishPartitions]] leaves the live table exactly
+    * as it was.
+    */
+  private[ext] def stagePartitions(spark: org.apache.spark.sql.SparkSession,
+                                   base: String, content: DataFrame,
+                                   partitionCol: String): Unit = {
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    adoptPartitionStaged(fs, basePath, partitionStaging(basePath, "delete-next"),
+      partitionCol, clean = true)
+    val staging = partitionStaging(basePath, "append-staging")
+    fs.delete(staging, true)
+    content.write.partitionBy(partitionCol).parquet(staging.toString)
+  }
+
+  /** The second half of [[stagePartitions]]: publish the staging as
+    * `.NAME.delete-next` (one rename — from here on a reader adopts it,
+    * as it adopts [[rewritePartitions]]' own staging) and swap the
+    * listed partitions live.
+    */
+  private[ext] def publishPartitions(spark: org.apache.spark.sql.SparkSession,
+                                     base: String, parts: Seq[Int],
+                                     partitionCol: String): Unit = {
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (staged, next) = (partitionStaging(basePath, "append-staging"),
+      partitionStaging(basePath, "delete-next"))
+    if (!fs.rename(staged, next))
+      throw new java.io.IOException(s"publish rename $staged -> $next failed")
+    swapStagedPartitions(fs, basePath, next, parts, partitionCol)
+  }
+
+  /** Swap each listed partition of a completed staging root live
+    * through a per-partition rename-aside (live → `.old` inside the
+    * staging root, staged → live, delete old); a listed partition with
+    * no staged dir disappears. Then drop the staging root.
+    */
+  private def swapStagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
+                                   basePath: org.apache.hadoop.fs.Path,
+                                   staging: org.apache.hadoop.fs.Path,
+                                   parts: Seq[Int], partitionCol: String): Unit = {
     parts.foreach { c =>
-      val live = new org.apache.hadoop.fs.Path(base, s"$partitionCol=$c")
+      val live = new org.apache.hadoop.fs.Path(basePath, s"$partitionCol=$c")
       val next = new org.apache.hadoop.fs.Path(staging, s"$partitionCol=$c")
       if (fs.exists(next)) {
         val old = new org.apache.hadoop.fs.Path(staging, s".$partitionCol=$c.old")

@@ -311,26 +311,57 @@ object TextOps {
   private[ext] def lexBucket(nBuckets: Int): Column =
     pmod(xxhash64(col("token")), lit(nBuckets.toLong)).cast("int")
 
-  /** The one batch → index-frames pass shared by init and append:
-    * postings rows (token, doc_id, tf, dl — `dl` denormalized onto the
+  /** One batch as index frames, under a store's bucketing: postings
+    * rows (token, doc_id, tf, dl, bucket — `dl` denormalized onto the
     * row, Lucene's norms-beside-postings layout, so scoring never
-    * joins a doc-length table), per-token df, and the one-row
-    * (n_docs, total_len) stats. The `tf` aggregate is PERSISTED and
-    * every returned frame derives from it, so the batch is tokenized
-    * exactly ONCE across the caller's writes (§1.2 — the stats
-    * collect, the postings write, and the dfreq write each re-ran the
-    * explode+aggregate before); the 4th element is the cache handle
-    * the caller must unpersist when its writes are done.
+    * joins a doc-length table), per-token (token, df, bucket), and the
+    * batch's facts — n_docs, total_len and the set of buckets its
+    * vocabulary hashes into.
     */
-  private[ext] def lexBatchFrames(documents: DataFrame)
-      : (DataFrame, DataFrame, (Long, Long), DataFrame) = {
-    val c = bm25Corpus(documents)
+  private[ext] final case class LexBatch(postings: DataFrame,
+                                         dfreq: DataFrame, nDocs: Long,
+                                         totalLen: Long, buckets: Seq[Int])
+
+  /** The one batch → [[LexBatch]] pass shared by init, stream day and
+    * append. The `tf` aggregate is PERSISTED for the duration of `body`
+    * and every frame derives from it, so the batch is tokenized exactly
+    * ONCE across the caller's writes (§1.2). The facts come from ONE
+    * collect over it, which also fills the cache.
+    * The documents are hash-partitioned by doc_id before tokenizing, so
+    * a doc's rows share one partition: the tf aggregate, the per-doc
+    * `dl` aggregate, the tf ⋈ dl join and the distinct-doc count then
+    * need no exchange of their own.
+    */
+  private[ext] def withLexBatch[A](documents: DataFrame, nBuckets: Int)
+                                  (body: LexBatch => A): A = {
+    val c = bm25Corpus(documents.select("doc_id", "text")
+      .repartition(col("doc_id")))
     val tfCached = c.tf.persist()
-    val postings = tfCached.join(c.dl, Seq("doc_id"))
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-    val Array(st) = c.stats.collect()
-    (postings, c.dfreq, (st.getLong(0), st.getLong(1)), tfCached)
+    try {
+      val Array(facts) = tfCached
+        .agg(count_distinct(col("doc_id")),
+          coalesce(sum(col("tf")), lit(0L)),
+          collect_set(lexBucket(nBuckets)))
+        .collect()
+      body(LexBatch(
+        tfCached.join(c.dl, Seq("doc_id"))
+          .select(col("token"), col("doc_id"), col("tf"), col("dl"),
+            lexBucket(nBuckets).as("bucket")),
+        c.dfreq.withColumn("bucket", lexBucket(nBuckets)),
+        facts.getLong(0), facts.getLong(1), facts.getSeq[Int](2).sorted))
+    } finally tfCached.unpersist(blocking = false)
   }
+
+  /** The ONE df merge of the lexical sidecars: union the (token, df,
+    * bucket) frames, then sum df per (token, bucket) — exact integer
+    * addition, and a token present in only one frame keeps its df.
+    * Append (live + batch), the served view and the manifested fold
+    * (live + day cells − tombstone cells) all merge through it.
+    */
+  private[ext] def lexDfreqSum(parts: Seq[DataFrame]): DataFrame =
+    parts.map(_.select("token", "df", "bucket")).reduce(_.unionByName(_))
+      .groupBy("token", "bucket").agg(sum(col("df")).as("df"))
+      .select("token", "df", "bucket")
 
   /** The `dfreq` sidecar's columns as every writer lays them out: the
     * batch frames' (token, df) with its [[lexBucket]] partition. Reads
@@ -510,9 +541,7 @@ object TextOps {
         val dayDfreq = spark.read.parquet(s"$dir/day_dfreq")
           .filter(col("day").isin(dayKeys: _*))
           .select("token", "df", "bucket")
-        val mergedDfreq = baseDfreq.unionByName(dayDfreq)
-          .groupBy("token", "bucket").agg(sum(col("df")).as("df"))
-          .select("token", "df", "bucket")
+        val mergedDfreq = lexDfreqSum(Seq(baseDfreq, dayDfreq))
         // filtered to the INJECTED day set — identical for the flat
         // store (all marker days), load-bearing for the manifested one
         // (folded days' cells linger until grace-retirement)
@@ -534,10 +563,7 @@ object TextOps {
       val tombDf = spark.read.parquet(s"$dir/tomb_dfreq")
         .filter(col("day").isin(tKeys: _*))
         .select(col("token"), (-col("df")).as("df"), col("bucket"))
-      val outDfreq = dfreq.unionByName(tombDf)
-        .groupBy("token", "bucket").agg(sum(col("df")).as("df"))
-        .filter(col("df") > 0)
-        .select("token", "df", "bucket")
+      val outDfreq = lexDfreqSum(Seq(dfreq, tombDf)).filter(col("df") > 0)
       val Array(ts) = spark.read.parquet(s"$dir/tomb_stats")
         .filter(col("day").isin(tKeys: _*))
         .agg(coalesce(sum("n_docs"), lit(0L)).as("nd"),
@@ -570,29 +596,28 @@ object TextOps {
     val b = docsBatch.persist()
     try {
       if (!b.isEmpty) {
-        val (postings, dfreq, (nDocs, totalLen), tfc) = lexBatchFrames(b)
-        // WRITE ORDER IS LOAD-BEARING: stats LAST. The day_stats
-        // partition is the day's commit marker — the served view
-        // ([[lexStoreView]] via [[lexCompleteDays]]) ignores a day
-        // until it lands, so a crash before it leaves the day invisible
-        // (replay completes it), never a day served with its
-        // df/n_docs/total_len contributions missing. The postings and
-        // dfreq cells are independent until that marker, so they write
-        // as CONCURRENT jobs (§2.6) off the one persisted tf pass.
-        // no rebalance on these writes: both frames are aggregate/join
-        // outputs whose partitioning AQE already coalesced to data
-        // size, so the files-per-bucket count is fine as-is and an
-        // extra exchange would only add a stage per write (measured
-        // +0.2-0.4 s each; the scan-shaped store writes are where
-        // [[Similarity.clusterForWrite]] pays)
-        try Jobs.concurrently(Seq(
-          () => postings.withColumn("bucket", lexBucket(nBuckets))
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$dir/day_postings/day=$day"),
-          () => dfreq.withColumn("bucket", lexBucket(nBuckets))
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$dir/day_dfreq/day=$day")))
-        finally tfc.unpersist(blocking = false)
+        val (nDocs, totalLen) = withLexBatch(b, nBuckets) { lb =>
+          // WRITE ORDER IS LOAD-BEARING: stats LAST. The day_stats
+          // partition is the day's commit marker — the served view
+          // ([[lexStoreView]] via [[lexCompleteDays]]) ignores a day
+          // until it lands, so a crash before it leaves the day
+          // invisible (replay completes it), never a day served with
+          // its df/n_docs/total_len contributions missing. The postings
+          // and dfreq cells are independent until that marker, so they
+          // write as CONCURRENT jobs (§2.6) off the one persisted tf
+          // pass. No rebalance on these writes: both frames are
+          // aggregate/join outputs whose partitioning AQE already
+          // coalesced to data size, so the files-per-bucket count is
+          // fine as-is and an extra exchange would only add a stage per
+          // write (measured +0.2-0.4 s each; the scan-shaped store
+          // writes are where [[Similarity.clusterForWrite]] pays)
+          Jobs.concurrently(Seq(
+            () => lb.postings.write.mode("overwrite").partitionBy("bucket")
+              .parquet(s"$dir/day_postings/day=$day"),
+            () => lb.dfreq.write.mode("overwrite").partitionBy("bucket")
+              .parquet(s"$dir/day_dfreq/day=$day")))
+          (lb.nDocs, lb.totalLen)
+        }
         lexStatsDf(spark, nDocs, totalLen, nBuckets)
           .select("n_docs", "total_len")
           .write.mode("overwrite").parquet(s"$dir/day_stats/day=$day")
@@ -749,20 +774,19 @@ object TextOps {
   def bm25IndexInit(documents: DataFrame, dir: String,
                     nBuckets: Int = 16): Unit = {
     val spark = documents.sparkSession
-    val (postings, dfreq, (nDocs, totalLen), tfc) = lexBatchFrames(documents)
-    // postings and dfreq are independent artifacts off the one persisted
-    // tf pass — concurrent jobs (§2.6); corpus_stats stays LAST (a
-    // reader treats its absence as "not a store", the init marker)
-    // aggregate/join-shaped inputs — already AQE-coalesced, no
-    // rebalance needed (see bm25IndexStreamDay)
-    try Jobs.concurrently(Seq(
-      () => postings.withColumn("bucket", lexBucket(nBuckets))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/postings"),
-      () => dfreq.withColumn("bucket", lexBucket(nBuckets))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/dfreq")))
-    finally tfc.unpersist(blocking = false)
+    val (nDocs, totalLen) = withLexBatch(documents, nBuckets) { b =>
+      // postings and dfreq are independent artifacts off the one
+      // persisted tf pass — concurrent jobs (§2.6); corpus_stats stays
+      // LAST (a reader treats its absence as "not a store", the init
+      // marker). Aggregate/join-shaped inputs — already AQE-coalesced,
+      // no rebalance needed (see bm25IndexStreamDay)
+      Jobs.concurrently(Seq(
+        () => b.postings.write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$dir/postings"),
+        () => b.dfreq.write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$dir/dfreq")))
+      (b.nDocs, b.totalLen)
+    }
     Similarity.writeRenameAside(lexStatsDf(spark, nDocs, totalLen, nBuckets),
       dir, "corpus_stats")
   }
@@ -774,75 +798,100 @@ object TextOps {
     * by addition — init + appends ≡ the union build EXACTLY
     * (`q_bm25_store_inc`), because tf/dl are per-document facts and
     * df/n_docs/total_len are additive over any partition of an
-    * append-only corpus. Sidecars are read FIRST (fail loud before
-    * any write, the IVF-append discipline).
+    * append-only corpus. The steps and commit order are
+    * [[lexAppendWith]]'s; here the rows commit as a `mode("append")`
+    * parquet write into `postings/bucket=B`.
     *
     * BATCH-vocabulary-sized merge (round 18 — closing r17's one
     * `weak`): only the dfreq buckets that contain a batch token are
-    * read, merged, and swapped ([[Similarity.rewritePartitions]]'s
-    * per-partition rename-aside); every other bucket's bytes never
-    * move. At a production vocabulary (billions of tokens across
+    * read, merged, and swapped (the per-partition rename-aside of
+    * [[Similarity.publishPartitions]]); every other bucket's bytes
+    * never move. At a production vocabulary (billions of tokens across
     * thousands of buckets) a day batch touches the few buckets its own
     * vocabulary hashes into, so the mutation cost tracks the BATCH
     * vocabulary, not the store's — the `lloyd_stats` O(batch) property
     * the lexical store was missing. Untouched buckets are spec-pinned
-    * byte-identical (`LexIndexStoreSpec`).
+    * byte-identical (`StoreCrashSafetySpec`).
+    *
+    * Crash windows (single-writer, like the IVF store): the parquet
+    * append is not atomic, so a crash inside it leaves partial postings
+    * rows; a crash after it and before the sidecar swaps leaves the
+    * sidecars under-counting. Both are rows-ahead-of-sidecars states,
+    * flagged by [[bm25StoreFsck]] and repaired by
+    * [[bm25IndexStatsRebuild]] in one columnar scan of the postings
+    * (no corpus read). A crash before the postings land leaves at most
+    * an unadopted `.dfreq.append-staging`: the store serves exactly
+    * its pre-append state, and the next append clears the staging.
     */
   def bm25IndexAppend(spark: org.apache.spark.sql.SparkSession,
-                      newDocs: DataFrame, dir: String): Unit = {
-    val (nDocs, totalLen, nBuckets) = lexStoreStats(spark, dir)
-    val (postings, dfBatch0, (bDocs, bLen), tfc) = lexBatchFrames(newDocs)
-    val dfBatch = dfBatch0.withColumn("bucket", lexBucket(nBuckets))
-      .persist()
-    try {
-      Similarity.clusterForWrite(
-        postings.withColumn("bucket", lexBucket(nBuckets)), "bucket")
+                      newDocs: DataFrame, dir: String): Unit =
+    lexAppendWith(spark, newDocs, dir) { rows =>
+      Similarity.clusterForWrite(rows, "bucket")
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
-      // the batch's bucket set (bounded by the batch vocabulary, already
-      // needed for the partition swap) prunes the live-dfreq read
-      val buckets = dfBatch.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val dfLive = lexStoreDfreq(spark, dir)
-        .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      // full-outer on (token, bucket) so both novel and shared tokens
-      // land, sums exact integers; bucket is a pure function of token,
-      // so the compound key never splits a token across rows
-      val merged = dfLive
-        .select(col("token"), col("df").as("df_live"), col("bucket"))
-        .join(dfBatch.select(col("token"), col("df").as("df_new"),
-          col("bucket")), Seq("token", "bucket"), "full_outer")
-        .select(col("token"),
-          (coalesce(col("df_live"), lit(0L)) +
-            coalesce(col("df_new"), lit(0L))).as("df"), col("bucket"))
-      Similarity.rewritePartitions(spark, s"$dir/dfreq", buckets, merged,
-        "bucket", cluster = false)
+    }
+
+  /** The ONE append core of the lexical stores, shared by the flat
+    * store ([[bm25IndexAppend]]) and the manifested one
+    * ([[LexIncremental.append]]), which differ only in how the batch's
+    * postings rows (token, doc_id, tf, dl, bucket) commit
+    * (`commitRows`):
+    *
+    *   1. `corpus_stats` is read FIRST (fail loud on a non-store
+    *      before any write; it pins the bucketing);
+    *   2. the batch's facts — n_docs, total_len and its bucket set —
+    *      come from ONE collect ([[withLexBatch]]);
+    *   3. `commitRows` and the sidecar merges run as CONCURRENT jobs
+    *      (§2.6): the dfreq merge (the live dfreq pruned to the batch
+    *      buckets, plus the batch df, through [[lexDfreqSum]]) and,
+    *      when an impact sidecar exists, its max/min/sum merge, each
+    *      STAGED under `.NAME.append-staging`, which no reader or
+    *      writer adopts ([[Similarity.stagePartitions]]);
+    *   4. only after the rows commit, each staging is published and its
+    *      buckets swap live ([[Similarity.publishPartitions]]);
+    *   5. `corpus_stats` is written LAST (rename-aside).
+    *
+    * So rows always land before their sidecars. A crash in the
+    * concurrent phase adds nothing a reader sees beyond what
+    * `commitRows` itself left: the merge staging is adopted by no one,
+    * and the next append clears it. A crash after the rows commit
+    * leaves the sidecars under-counting: the store's one documented
+    * window, repaired by its StatsRebuild.
+    */
+  private[ext] def lexAppendWith(spark: org.apache.spark.sql.SparkSession,
+                                 newDocs: DataFrame, dir: String)
+                                (commitRows: DataFrame => Unit): Unit = {
+    val (nDocs, totalLen, nBuckets) = lexStoreStats(spark, dir)
+    val (bDocs, bLen) = withLexBatch(newDocs, nBuckets) { b =>
+      val inBatch = col("bucket").isin(b.buckets.map(Integer.valueOf): _*)
+      val dfreq = s"$dir/dfreq" ->
+        lexDfreqSum(Seq(lexStoreDfreq(spark, dir).filter(inBatch), b.dfreq))
       // the impact sidecar (when built) merges ADDITIVELY on append —
       // max/min/count are max/min/sum-mergeable — over the same
       // affected buckets only; the avgdl-free bound pair stays valid
       // as this append moves the corpus statistics
-      lexImpactMeta(spark, dir).foreach { nBlocks =>
-        val batchImp = lexImpactOf(
-          postings.withColumn("bucket", lexBucket(nBuckets)))
+      val impact = lexImpactMeta(spark, dir).map { _ =>
         Similarity.adoptDeleteStaged(spark, s"$dir/impact", "bucket")
-        val liveImp = spark.read.parquet(s"$dir/impact")
-          .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-          .select("token", "block", "bucket", "max_tf", "min_dl", "cnt")
-        val mergedImp = liveImp.unionByName(
-          batchImp.select("token", "block", "bucket", "max_tf", "min_dl",
-            "cnt"))
+        val cols = Seq("token", "block", "bucket", "max_tf", "min_dl", "cnt")
+        s"$dir/impact" -> spark.read.parquet(s"$dir/impact").filter(inBatch)
+          .select(cols.map(col): _*)
+          .unionByName(lexImpactOf(b.postings).select(cols.map(col): _*))
           .groupBy("token", "block", "bucket")
           .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"),
             sum(col("cnt")).as("cnt"))
-        Similarity.rewritePartitions(spark, s"$dir/impact", buckets,
-          mergedImp, "bucket", cluster = false)
       }
-      Similarity.writeRenameAside(
-        lexStatsDf(spark, nDocs + bDocs, totalLen + bLen, nBuckets),
-        dir, "corpus_stats")
-    } finally {
-      dfBatch.unpersist(blocking = false)
-      tfc.unpersist(blocking = false)
+      val merges = dfreq +: impact.toSeq
+      Jobs.concurrently((() => commitRows(b.postings)) +: merges.map {
+        case (table, merged) =>
+          () => Similarity.stagePartitions(spark, table, merged, "bucket")
+      })
+      merges.foreach { case (table, _) =>
+        Similarity.publishPartitions(spark, table, b.buckets, "bucket")
+      }
+      (b.nDocs, b.totalLen)
     }
+    Similarity.writeRenameAside(
+      lexStatsDf(spark, nDocs + bDocs, totalLen + bLen, nBuckets),
+      dir, "corpus_stats")
   }
 
   /** Re-derive both sidecars from the postings bytes — the recovery

@@ -19,7 +19,9 @@ import graft.SparkSpec
   *      missing from the label frame as keep = false on EVERY side;
   *   5. the flat whole-store swap ([[Similarity.stageThenSwap]])
   *      compacts in place: the store keeps serving at its own dir,
-  *      with no manifest beside it.
+  *      with no manifest beside it;
+  *   6. a lexical append that crashes before its postings land leaves
+  *      only a dfreq merge staging that no reader adopts.
   */
 class StoreCrashSafetySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -144,6 +146,54 @@ class StoreCrashSafetySpec extends AnyFunSuite with SparkSpec {
     assert(dfOf(dir) === dfOf(dir2).flatMap { case (t, n) =>
       if (t == "qqzz") None else Some(t -> n)
     }, "deleting the synthetic doc must restore the original dfreq")
+  }
+
+  test("append crash before the postings land: a completed dfreq merge " +
+    "staging is adopted by no reader; the next append clears it") {
+    val d = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lex_stage")
+      .toString + "/idx"
+    val old = col("doc_id") % 3 =!= 0
+    TextOps.bm25IndexInit(d.filter(old), dir)
+    val fs = hadoopFs(dir)
+    def files(table: String): Seq[(String, Long, Long)] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$dir/$table"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+    }
+    val (dfreqBefore, postingsBefore) = (files("dfreq"), files("postings"))
+    // the crash state: the append's concurrent phase staged its whole
+    // dfreq merge (committed by _SUCCESS), the postings append had not
+    // landed yet
+    val batch = d.filter(!old)
+    val (nDocs0, _, nBuckets) = TextOps.lexStoreStats(spark, dir)
+    TextOps.withLexBatch(batch, nBuckets) { b =>
+      Similarity.stagePartitions(spark, s"$dir/dfreq", TextOps.lexDfreqSum(Seq(
+        TextOps.lexStoreDfreq(spark, dir)
+          .filter(col("bucket").isin(b.buckets.map(Integer.valueOf): _*)),
+        b.dfreq)), "bucket")
+    }
+    val staging = new org.apache.hadoop.fs.Path(s"$dir/.dfreq.append-staging")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")))
+    // a probe and the fsck serve the pre-append store exactly, and
+    // neither moves a sidecar byte
+    val preAppend = TextOps.bm25TopDocs(d.filter(old)).collect().map(_.toSeq)
+    assert(TextOps.bm25StoreTopDocs(spark, dir).collect().map(_.toSeq)
+      .toSeq === preAppend.toSeq)
+    val fsck = TextOps.bm25StoreFsck(spark, dir).collect()(0)
+    assert(fsck.getBoolean(3) && fsck.getBoolean(8) && fsck.getBoolean(9),
+      s"fsck must read the pre-append store as whole: $fsck")
+    assert(fsck.getLong(4) === nDocs0 && fsck.getLong(5) === nDocs0)
+    assert(files("dfreq") === dfreqBefore && files("postings") === postingsBefore,
+      "no reader may adopt the append staging")
+    // the retried append clears the staging and lands exactly the batch
+    TextOps.bm25IndexAppend(spark, batch, dir)
+    assert(!fs.exists(staging), "the next append must clear the staging")
+    assert(TextOps.bm25StoreTopDocs(spark, dir).collect().map(_.toSeq)
+      .toSeq === TextOps.bm25TopDocs(d).collect().map(_.toSeq).toSeq)
+    val after = TextOps.bm25StoreFsck(spark, dir).collect()(0)
+    assert(after.getBoolean(3) && after.getBoolean(8) && after.getBoolean(9))
   }
 
   test("a torn streamed day (no day_stats commit marker) is invisible to " +

@@ -509,23 +509,15 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     assert(dupes().isEmpty, "after compaction")
   }
 
-  test("store hybrid plan shape: the lexical arm caches nothing, the " +
-    "fusion has one exchange, and the call's job count is bounded") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  /** The Spark jobs `body` runs, counted by job group: a marker job
+    * after it drains the listener queue, so every earlier job start
+    * has been delivered when the count is read.
+    */
+  def jobsOf[A](name: String)(body: => A): (A, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
       SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val (d, emb) = storeCorpus()
-    val (lexDir, annDir) = (tmpStore("graft_shape_lex"), tmpStore("graft_shape_ann"))
-    TextOps.bm25IndexInit(d, lexDir)
-    Similarity.ivfIndexStoreInit(emb, annDir)
-    val (qd, qv) = (d.filter(col("doc_id") < 10), emb.filter(col("vec_id") < 10))
     val sc = spark.sparkContext
-    val (group, markerGroup) = ("textops-plan-shape", "textops-plan-shape-marker")
+    val (group, markerGroup) = (s"jobs-of-$name", s"jobs-of-$name-marker")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
     val drained = new java.util.concurrent.CountDownLatch(1)
@@ -539,6 +531,32 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob.get) drained.countDown()
     }
+    def inGroup[A](g: String)(b: => A): A = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try b finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(counter)
+    try {
+      val result = inGroup(group)(body)
+      inGroup(markerGroup)(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("store hybrid plan shape: the lexical arm caches nothing, the " +
+    "fusion has one exchange, and the call's job count is bounded") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import scala.jdk.CollectionConverters._
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_shape_lex"), tmpStore("graft_shape_ann"))
+    TextOps.bm25IndexInit(d, lexDir)
+    Similarity.ivfIndexStoreInit(emb, annDir)
+    val (qd, qv) = (d.filter(col("doc_id") < 10), emb.filter(col("vec_id") < 10))
     val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkPlan]()
     val planner = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
@@ -548,30 +566,15 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              e: Exception): Unit = plans.add(qe.executedPlan)
     }
-    def inGroup[A](g: String)(body: => A): A = {
-      sc.setJobGroup(g, g, interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-    }
     // suites run one at a time: from an empty cache, any entry found
     // after the call is the call's
     spark.catalog.clearCache()
-    sc.addSparkListener(counter)
     spark.listenerManager.register(planner)
-    val fused = try {
-      val f = inGroup(group) {
-        val f = TextOps.hybridRrfStoreTopDocs(qd, qv, lexDir, annDir)
-        assert(f.collect().length === 50)
-        f
-      }
-      // a marker job after the call: once its end is delivered, so is
-      // every earlier event on the same listener queue
-      inGroup(markerGroup)(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val (fused, jobs) = try jobsOf("textops-plan-shape") {
+      val f = TextOps.hybridRrfStoreTopDocs(qd, qv, lexDir, annDir)
+      assert(f.collect().length === 50)
       f
-    } finally {
-      spark.listenerManager.unregister(planner)
-      sc.removeSparkListener(counter)
-    }
+    } finally spark.listenerManager.unregister(planner)
     object Aqe extends AdaptiveSparkPlanHelper
     assert(spark.sharedState.cacheManager.isEmpty,
       "the call left a cache entry behind")
@@ -585,7 +588,30 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     // 18 jobs; the form before (a cached query-token frame, a bucket
     // distinct-collect, a full-outer-join fusion with four exchanges)
     // ran 25 for this call
-    assert(jobs.get <= 18, s"${jobs.get} jobs")
+    assert(jobs <= 18, s"$jobs jobs")
+  }
+
+  test("store appends run their independent work as concurrent jobs, in " +
+    "a bounded number of jobs") {
+    import org.apache.spark.sql.functions.col
+    val (d, emb) = storeCorpus()
+    val (lexDir, annDir) = (tmpStore("graft_jobs_lex"), tmpStore("graft_jobs_ann"))
+    TextOps.bm25IndexInit(d.filter(col("doc_id") % 2 === 0), lexDir)
+    Similarity.ivfIndexStoreInit(emb.filter(col("vec_id") % 2 === 0), annDir)
+    val (_, lex) = jobsOf("lex-append") {
+      TextOps.bm25IndexAppend(spark, d.filter(col("doc_id") % 2 === 1), lexDir)
+    }
+    val (_, ivf) = jobsOf("ivf-append") {
+      Similarity.ivfIndexStoreAppend(spark,
+        emb.filter(col("vec_id") % 2 === 1), annDir)
+    }
+    info(s"lexical append: $lex jobs, IVF append: $ivf jobs")
+    // 11-12 and 8 jobs; the serial forms before ran 18 and 10. A
+    // separate bucket distinct-collect adds jobs to the lexical append,
+    // and an inferred-schema read of lloyd_stats or centroids adds one
+    // each to the IVF append
+    assert(lex <= 12, s"lexical append ran $lex jobs")
+    assert(ivf <= 8, s"IVF append ran $ivf jobs")
   }
 
   test("declared sidecar schemas match what the store writers write") {
@@ -607,6 +633,7 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
       pinned(s"$lex/corpus_stats", TextOps.LEX_STATS_SCHEMA)
       pinned(s"$lex/dfreq", TextOps.LEX_DFREQ_SCHEMA)
       pinned(s"$annDir/centroids", Similarity.CENTROID_PROBE_SCHEMA)
+      pinned(s"$annDir/lloyd_stats", Similarity.LLOYD_STATS_SCHEMA)
     }
     TextOps.bm25IndexInit(d.filter(col("doc_id") % 2 === 0), lexDir)
     Similarity.ivfIndexStoreInit(emb.filter(col("vec_id") % 2 === 0), annDir)

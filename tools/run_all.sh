@@ -19,4 +19,4 @@ python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify | tail -3
 echo "== bench sf0.1"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS java $ADD_OPENS -Xmx$HEAP -cp "$CP" graft.Bench 2>/dev/null | tail -1
 echo "== capstone ETL"
-rm -rf /tmp/graft_capstone && java $ADD_OPENS -Xmx8g -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1
+rm -rf /tmp/graft_capstone && java $ADD_OPENS -Xmx$HEAP -cp "$CP" graft.pipeline.RunCapstone src/test/resources/reference/cp.cfg /tmp/graft_capstone 2>/dev/null | tail -1
